@@ -6,9 +6,10 @@
         --media s3://.../media       (media_ref, content) \
         --out   s3://.../extracted \
         --ledger s3://.../ledger \
-        [--resume] [--n-buckets 4096] [--n-salt 16]
+        [--metrics s3://.../metrics] [--n-buckets 256] \
+        [--buckets-per-wave 8] [--run-id ID]
 
-Resumes idempotently from the bucket ledger when --resume is set.
+Every run resumes idempotently: buckets already in the ledger are skipped.
 """
 
 from __future__ import annotations

@@ -21,6 +21,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from ocr_text_recognition_spark.extraction.html import extract_main_text
 from ocr_text_recognition_spark.kernel import reference_kernel, render
 from ocr_text_recognition_spark.kernel.imgcodec import encode_image
 
@@ -178,7 +179,7 @@ def make_golden(docs: pd.DataFrame, media: pd.DataFrame) -> pd.DataFrame:
                         "kind": s["kind"],
                         "text": _ref_text(s["kind"], s["media_ref"])
                         if s["kind"] in ("media", "pdf")
-                        else reference_kernel.extract_main_text(s["text"]),
+                        else extract_main_text(s["text"]),
                         "media_ref": s["media_ref"],
                         "offset": s["offset"],
                     }

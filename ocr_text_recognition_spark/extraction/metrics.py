@@ -55,28 +55,10 @@ def partition_metrics(extracted_docs: DataFrame, run_id: str) -> DataFrame:
     return extracted_docs.mapInPandas(gen, METRICS_SCHEMA)
 
 
-def _levenshtein_ratio(a: str, b: str) -> float:
-    """Character error rate: edit_distance / len(reference)."""
-    import numpy as np
-
-    if a == b:
-        return 0.0
-    if not b:
-        return 1.0
-    prev = np.arange(len(b) + 1)
-    for i, ca in enumerate(a, 1):
-        cur = np.empty(len(b) + 1, dtype=np.int64)
-        cur[0] = i
-        for j, cb in enumerate(b, 1):
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-        prev = cur
-    return float(prev[-1]) / len(b)
-
-
 def cer_vs_reference(extracted: DataFrame, golden: DataFrame) -> DataFrame:
     """Join extracted output to golden fixtures on doc_id; emit per-doc CER
     over the concatenated span texts. Built-in ``levenshtein`` stays
-    JVM-side; the python fallback exists only for documentation parity."""
+    JVM-side."""
     def flat(df: DataFrame, out: str) -> DataFrame:
         return df.select(
             "doc_id",

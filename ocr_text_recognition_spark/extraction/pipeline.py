@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ocr_text_recognition_spark.extraction.udfs import (
     extract_main_text_udf,
     extract_ref_udf,
-    recognize_media_udf,
+    make_extract_ref_udf,
 )
 
 DEFAULT_N_SALT = 8
@@ -48,7 +48,7 @@ DEFAULT_N_SALT = 8
 # CPU — so byte-sized defaults under-split small-to-medium inputs: a
 # 6 MiB documents file becomes a 1-task scan and AQE coalesces the
 # post-kernel union stage to 2-3 tasks no matter the core count
-# (profiled: scripts/profile_gate.py; the stage-49 serialization in
+# (profiled: perfbench/run.py --trace 1; the stage-49 serialization in
 # BENCH/gate_attempts_r5.md attempt 6). These are the stock defaults we
 # clamp back to at scale.
 _DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
@@ -97,35 +97,6 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def recognize_distinct_media(
-    spans_media: DataFrame,
-    media: DataFrame,
-    parallelism: int | None = None,
-    kernel_udf=recognize_media_udf,
-) -> DataFrame:
-    """(media_ref) -> (media_ref, text): run the kernel once per distinct ref.
-
-    The distinct() is the map-side-combine analog for the expensive UDF —
-    popular images (shared headers, logos, re-hosted scans) are recognized
-    once regardless of how many spans reference them.
-
-    The explicit repartition after distinct() is load-bearing: the ref list
-    is bytes-tiny but each ref costs real kernel CPU, so AQE's
-    byte-size-based partition coalescing would collapse the UDF stage onto
-    one task. Partitions here must be sized by COMPUTE, not bytes.
-    """
-    if parallelism is None:
-        parallelism = spans_media.sparkSession.sparkContext.defaultParallelism * 2
-    distinct_refs = spans_media.select("media_ref").distinct()
-    # Repartition the payloads (post-join, pre-UDF) so the fan-out holds for
-    # every join strategy AQE might pick.
-    payloads = distinct_refs.join(media, "media_ref", "left").repartition(parallelism)
-    return payloads.select(
-        "media_ref",
-        kernel_udf(F.col("content")).alias("text"),
-    )
-
-
 def reassemble_spans(extracted: DataFrame, n_salt: int = DEFAULT_N_SALT) -> DataFrame:
     """(doc_id, kind, text, media_ref, offset) -> (doc_id, spans) with spans
     sorted by offset. Two-phase salted aggregation so one media-heavy doc
@@ -163,40 +134,17 @@ def run_extraction(
     spark: SparkSession,
     docs: DataFrame,
     media: DataFrame,
-    n_salt: int = DEFAULT_N_SALT,
-    persist_media_locators: bool = True,
-    input_partitions: int | None = None,
     preprocess_kwargs: dict | None = None,
-    kernel_parallelism: int | None = None,
 ) -> DataFrame:
     """Full pipeline: documents + media -> extracted documents.
 
     Returns a DataFrame with the same (doc_id, spans) shape as the input,
     where every span's text has been replaced by its extraction result.
 
-    ``persist_media_locators``: the media-span locator frame (doc_id,
-    media_ref, offset — NO payloads, so it is tiny relative to the corpus)
-    feeds two consumers (the distinct-ref recognition input and the
-    join-back); caching it keeps the documents table at two scans instead
-    of three. Disable if even the locator set exceeds cluster cache+disk.
-
-    ``input_partitions``: explicit doc_id-hash repartition of the input
-    (the SURVEY §3.4 'repartition by salted doc_id hash' stage). Leave None
-    when the source is already well-split (bucketed Iceberg / many files);
-    set it when reading few fat files so the UDF stages fan out.
-
     ``preprocess_kwargs``: kernel preprocessing overrides shipped into the
     media UDF (e.g. {'binarizer': 'adaptive', 'rotate_portrait': True}
     for photographed/scanned corpora); None keeps the default Otsu chain.
-
-    ``kernel_parallelism``: partition count for the kernel-UDF stage
-    (default 2x defaultParallelism). Per-image kernel cost varies ~4x
-    with image size, so finer partitions trade a little per-task overhead
-    against straggler tail; raise toward 4x cores when the corpus mixes
-    very small and very large images.
     """
-    if input_partitions:
-        docs = docs.repartition(input_partitions, "doc_id")
     spans = explode_spans(docs)
 
     spans_text = spans.filter(F.col("kind") == "text").select(
@@ -211,27 +159,23 @@ def run_extraction(
     # distinct-ref pass: refs are deduped per (kind, media_ref), payloads
     # joined once, and extract_ref_udf dispatches per kind inside the Arrow
     # batch — one documents scan and one join-back for both modalities.
-    spans_ref = spans.filter(F.col("kind").isin("media", "pdf")).select(
-        "doc_id", "kind", "media_ref", "offset"
+    # The locator frame (doc_id, kind, media_ref, offset — no payloads, so
+    # tiny next to the corpus) feeds both the distinct-ref input and the
+    # join-back; persisting it keeps the documents table at two scans
+    # instead of three.
+    spans_ref = (
+        spans.filter(F.col("kind").isin("media", "pdf"))
+        .select("doc_id", "kind", "media_ref", "offset")
+        .persist()
     )
-    if persist_media_locators:
-        spans_ref = spans_ref.persist()
-    if kernel_parallelism is None:
-        parallelism = spark.sparkContext.defaultParallelism * 2
-    elif kernel_parallelism >= 1:
-        parallelism = kernel_parallelism
-    else:
-        raise ValueError(f"kernel_parallelism must be >= 1, got {kernel_parallelism}")
     distinct_refs = spans_ref.select("kind", "media_ref").distinct()
-    # Repartition the payloads (post-join, pre-UDF): partitions must be
-    # sized by kernel COMPUTE, not bytes, or AQE coalesces the UDF stage.
+    # Repartition the payloads (post-join, pre-UDF): the ref list is
+    # bytes-tiny but each ref costs real kernel CPU, so partitions must be
+    # sized by COMPUTE, not bytes, or AQE coalesces the UDF stage onto a
+    # few tasks.
+    parallelism = spark.sparkContext.defaultParallelism * 2
     payloads = distinct_refs.join(media, "media_ref", "left").repartition(parallelism)
-    if preprocess_kwargs:
-        from ocr_text_recognition_spark.extraction.udfs import make_extract_ref_udf
-
-        ref_udf = make_extract_ref_udf(**preprocess_kwargs)
-    else:
-        ref_udf = extract_ref_udf
+    ref_udf = make_extract_ref_udf(**preprocess_kwargs) if preprocess_kwargs else extract_ref_udf
     ref_text = payloads.select(
         "kind",
         "media_ref",
@@ -246,7 +190,7 @@ def run_extraction(
     )
 
     extracted = spans_text.unionByName(spans_ref_out)
-    return reassemble_spans(extracted, n_salt=n_salt)
+    return reassemble_spans(extracted)
 
 
 def run_extraction_demo(n_docs: int = 30, seed: int = 42) -> None:

@@ -50,24 +50,6 @@ def extract_main_text_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         yield s.map(lambda x: extract(x) if x is not None else "")
 
 
-@pandas_udf(StringType())
-def recognize_media_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Media payload bytes -> recognized text (full preprocessing +
-    segmentation + greedy decode per image, vectorized numpy inside)."""
-    _, recognize, _ = _engine()
-    for s in batches:
-        yield s.map(lambda b: recognize(b) if b is not None else "")
-
-
-@pandas_udf(StringType())
-def parse_pdf_layout_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """PDF-ish page payload -> main text (furniture strip, fine-print drop,
-    y-gap line grouping, reading order — extraction/pdflayout.py)."""
-    _, _, parse_pdf = _engine()
-    for s in batches:
-        yield s.map(parse_pdf)
-
-
 def make_extract_ref_udf(**preprocess_kwargs):
     """Build the (kind, payload) -> text dispatch UDF with optional kernel
     preprocessing overrides (binarizer='adaptive', adaptive_block=...,

@@ -1,9 +1,9 @@
-"""The complete per-image / per-document kernel, assembled.
+"""The complete per-image kernel, assembled.
 
-This is the single-machine (no Spark) path used to FREEZE golden fixtures;
-the Spark pipeline (extraction/pipeline.py) must reproduce its output with
-span-sequence equality (kind, text, media_ref, order) per document —
-the north-rule invariant (BASELINE.json:15).
+This is the single-machine (no Spark) path that corpus.make_golden uses to
+FREEZE golden fixtures; the Spark pipeline (extraction/pipeline.py) must
+reproduce its output with span-sequence equality (kind, text, media_ref,
+order) per document — the north-rule invariant (BASELINE.json:15).
 
 Chain mirrors the reference's preprocessing order
 (/root/reference/src/model/ocr_model.py:55-84 and
@@ -14,11 +14,8 @@ deskew -> (ruled grid? table path : free-text path).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 
-from ocr_text_recognition_spark.extraction.html import extract_main_text
 from ocr_text_recognition_spark.kernel import imageops, recognize, tableparse
 from ocr_text_recognition_spark.kernel.imgcodec import decode_image
 
@@ -104,43 +101,3 @@ def recognize_media_bytes(data: bytes | None, **preprocess_kwargs) -> str:
     if table is not None:
         return "\n".join(CELL_SEP.join(row) for row in table)
     return recognize.recognize_text(mask)
-
-
-def extract_table_bytes(data: bytes | None) -> list[list[str]] | None:
-    """Media payload -> table rows, or None when no ruled grid detected."""
-    if not data:
-        return None
-    try:
-        img = decode_image(bytes(data))
-    except Exception:
-        return None
-    return tableparse.extract_table(preprocess_image(img))
-
-
-@dataclass(frozen=True)
-class Span:
-    kind: str
-    text: str
-    media_ref: str
-    offset: int
-
-
-def process_document(
-    spans: list[tuple[str, str, str, int]],
-    media_lookup: dict[str, bytes],
-) -> list[Span]:
-    """One document's spans -> extracted spans, original order preserved.
-
-    ``spans`` items are (kind, text, media_ref, offset). Text spans run the
-    main-content extractor; media spans run the recognition kernel on the
-    payload found via media_ref ('' when the ref is missing).
-    """
-    out = []
-    for kind, text, media_ref, offset in spans:
-        if kind == "media":
-            extracted = recognize_media_bytes(media_lookup.get(media_ref))
-        else:
-            extracted = extract_main_text(text)
-        out.append(Span(kind=kind, text=extracted, media_ref=media_ref, offset=offset))
-    out.sort(key=lambda s: s.offset)
-    return out

@@ -767,7 +767,8 @@ def substring_dedup_apply(
     array — token positions are never exploded, so the corpus pass is
     a single map-shaped stage. Docs shorter than ``window`` tokens (no
     windows) and docs with no duplicated windows pass through with
-    ``n_removed = 0``.
+    ``n_removed = 0``; a NULL-text doc comes back with ``clean_text = ''``
+    and NULL token counts.
 
     Returns (doc_id, clean_text, n_tokens, n_removed) — tokens counted
     on the normalized (lowercased, whitespace-split) form the cuts are
@@ -795,7 +796,7 @@ def substring_dedup_apply(
     )
     return joined.select(
         "doc_id",
-        F.array_join(kept, " ").alias("clean_text"),
+        F.coalesce(F.array_join(kept, " "), F.lit("")).alias("clean_text"),
         F.size("toks").cast("int").alias("n_tokens"),
         (F.size("toks") - F.size(kept)).cast("int").alias("n_removed"),
     )

@@ -64,7 +64,7 @@ cores, corpus_dir, trials = int(sys.argv[1]), sys.argv[2], int(sys.argv[3])
 # Job-level scan/shuffle sizing (extraction_session_conf): the job is
 # compute-bound per row, so Spark's byte-sized defaults under-split a
 # small benchmark corpus (1-task scans, AQE-coalesced 3-task post-kernel
-# stage — profiled in scripts/profile_gate.py); the helper clamps back
+# stage — profiled with perfbench/run.py --trace 1); the helper clamps back
 # to stock values at production input sizes. Same conf at every level.
 nbytes = sum(os.path.getsize(os.path.join(corpus_dir, f))
              for f in os.listdir(corpus_dir))

@@ -8,8 +8,10 @@ reference couldn't make (its OCR engines are nondeterministic; ours is not).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
+from ocr_text_recognition_spark.corpus import make_golden
 from ocr_text_recognition_spark.extraction.html import extract_main_text
 from ocr_text_recognition_spark.kernel import (
     font,
@@ -157,16 +159,34 @@ class TestReferenceKernel:
 
     TAB = [["Subject", "HK1"], ["Math", "8.5"]]
 
-    def test_process_document_preserves_order(self):
-        media = {"m1": encode_image(render.render_text_image(["inner text"]))}
+    def test_make_golden_preserves_order(self):
+        """The golden path sorts by offset and dispatches per kind: text
+        through the HTML extractor, media through the kernel, pdf through
+        the layout parser, and a missing ref to ''."""
+        image = encode_image(render.render_text_image(["inner text"]))
+        page = b"%PDFISH 1.0 612 792\n300 103 11 world\n50 100 11 hello"
+        media = pd.DataFrame(
+            [{"media_ref": "m1", "content": image}, {"media_ref": "p1", "content": page}]
+        )
         spans = [
-            ("media", "", "m1", 1),
-            ("text", "<p>main content paragraph here</p>", "", 0),
+            {"kind": "media", "text": "", "media_ref": "m1", "offset": 2},
+            {"kind": "pdf", "text": "", "media_ref": "p1", "offset": 1},
+            {"kind": "text", "text": "<p>main content paragraph here</p>", "media_ref": "", "offset": 0},
+            {"kind": "media", "text": "", "media_ref": "nope", "offset": 3},
         ]
-        out = reference_kernel.process_document(spans, media)
-        assert [s.offset for s in out] == [0, 1]
-        assert out[0].kind == "text" and out[0].text == "main content paragraph here"
-        assert out[1].text == "INNER TEXT"
+        (out,) = make_golden(pd.DataFrame([{"doc_id": "d0", "spans": spans}]), media)["spans"]
+        assert [(s["offset"], s["kind"]) for s in out] == [
+            (0, "text"),
+            (1, "pdf"),
+            (2, "media"),
+            (3, "media"),
+        ]
+        assert [s["text"] for s in out] == [
+            "main content paragraph here",
+            "hello world",
+            "INNER TEXT",
+            "",
+        ]
 
 
 class TestHtmlExtract:

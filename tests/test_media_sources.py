@@ -21,9 +21,11 @@ def test_read_media_dir_filters_extensions(spark, tmp_path):
     assert rows["a"] == payload
 
     # scanned payloads flow straight into the kernel UDF
-    from ocr_text_recognition_spark.extraction.udfs import recognize_media_udf
+    from pyspark.sql import functions as F
 
-    out = media.select(recognize_media_udf("content").alias("t")).collect()
+    from ocr_text_recognition_spark.extraction.udfs import extract_ref_udf
+
+    out = media.select(extract_ref_udf(F.lit("media"), "content").alias("t")).collect()
     assert {r["t"] for r in out} == {"SCAN ME"}
 
 

@@ -1550,6 +1550,37 @@ def test_substring_dedup_apply_rewrites_corpus(spark):
     }
 
 
+def test_substring_dedup_apply_matches_oracle_with_null_text(spark):
+    """q113 against its DuckDB oracle on one tiny table: a shared
+    40-token run cut from two docs, a short doc, and a NULL-text doc. The
+    NULL doc comes back with clean_text '' and NULL token counts on both
+    engines."""
+    import duckdb
+    import pandas as pd
+
+    from ocr_text_recognition_spark.operators.dedup import substring_dedup_apply
+    from ocr_text_recognition_spark.oracles import ORACLES
+
+    run = " ".join(f"w{i}" for i in range(40))
+    rows = [(1, f"head {run} tail"), (2, f"{run} Other words"), (3, "short doc"), (4, None)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        tuple(r)
+        for r in substring_dedup_apply(
+            docs, "doc_id", "text", window=32, max_window_df=100
+        ).collect()
+    )
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    rel = con.sql(ORACLES["q113_substring_dedup_apply"])
+    assert [d[0] for d in rel.description] == ["doc_id", "clean_text", "n_tokens", "n_removed"]
+    want = sorted(rel.fetchall())
+
+    assert got == want
+    assert want[3] == (4, "", None, None)
+
+
 def test_bpe_train_matches_python_twin(spark):
     """BPE merge training vs an independent plain-Python implementation
     of Sennrich et al. 2016 (frequency-weighted distinct words, greedy
