@@ -18,8 +18,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ocr_text_recognition_spark.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1)))
+CPUS = default_cores()
 EXTRACTION_DOCS = int(os.environ.get("SPARK_GRAFT_EXTRACT_DOCS", "8000"))
 
 BENCH_QUERIES = [
@@ -111,8 +113,7 @@ def main() -> None:
 
     # --- relational/operator queries over the sf tables.
     # MEDIAN of TRIALS timed passes after one warm pass: single runs on a
-    # shared box swing 2x run-to-run (same methodology as
-    # scripts/bench_scaling.py's median-of-5).
+    # shared box swing 2x run-to-run.
     import statistics
 
     TRIALS = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "3"))
@@ -188,23 +189,19 @@ def main() -> None:
     matched = sum(1 for d in want if got.get(d) == want[d])
     span_match_rate = matched / max(len(want), 1)
 
-    # scaling-gate evidence from the most recent scripts/bench_scaling.py
-    # run (BENCH/scaling.json) — the north rule's N -> 4N number travels
-    # with the per-round bench artifact.
+    # scaling-gate verdict from the most recent scripts/scaling_gate.py run
+    # (BENCH/scaling.json): the north rule's N -> 4N number travels with the
+    # bench line. Only the six verdict fields, so the one-line artifact stays
+    # short; generated_at makes a stale gate run visible as such.
     scaling = None
     scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "scaling.json")
     if os.path.exists(scaling_path):
         with open(scaling_path) as f:
             s = json.load(f)
-        # only the gate verdict travels: the full probe log would push the
-        # one-line artifact past what the round capture keeps. generated_at
-        # makes a stale scaling run visible as such.
-        gate = s.get("gate") or {}
         scaling = {
-            k: gate.get(k)
-            for k in ("pair", "efficiency", "target", "pass", "ceiling_efficiency")
+            k: s.get(k)
+            for k in ("pair", "efficiency", "target", "pass", "ceiling_efficiency", "generated_at")
         }
-        scaling["generated_at"] = s.get("generated_at")
 
     total = round(sum(timings.values()), 3)
     print(

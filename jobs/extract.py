@@ -60,7 +60,7 @@ def main() -> None:
     from ocr_text_recognition_spark.extraction.checkpoint import run_with_checkpoints
     from ocr_text_recognition_spark.extraction.metrics import partition_metrics
     from ocr_text_recognition_spark.extraction.pipeline import extraction_session_conf
-    from ocr_text_recognition_spark.session import get_spark
+    from ocr_text_recognition_spark.session import default_cores, get_spark
 
     # Scan/shuffle sizing for a compute-bound job: target >= 4 splits per
     # slot, clamped back to Spark's stock values at multi-GB inputs (the
@@ -80,7 +80,7 @@ def main() -> None:
     extra_conf = None
     nbytes = _local_bytes(args.docs) + _local_bytes(args.media)
     if nbytes:
-        extra_conf = extraction_session_conf(nbytes, os.cpu_count() or 8)
+        extra_conf = extraction_session_conf(nbytes, default_cores())
     spark = get_spark("extract_job", extra_conf=extra_conf)
     docs = spark.read.parquet(args.docs)
     media = spark.read.parquet(args.media)

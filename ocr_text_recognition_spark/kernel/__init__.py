@@ -21,10 +21,11 @@ def _tune_allocator() -> None:
     numpy buffers above the default 128 KiB threshold are serviced by
     mmap/munmap PER ALLOCATION; each munmap is a TLB shootdown and each
     fresh mmap returns zero-fill pages, so the page-fault + zeroing cost
-    is paid again on every image. One worker barely notices; 8+ packed
+    is paid again on every image. One worker barely notices; many packed
     workers contend on those kernel-side operations and per-worker
-    throughput drops (the packing ceiling tracked in BENCH/BASELINE.md —
-    measured ~7% aggregate win at 8 workers from this alone). Raising
+    throughput drops (measured ~7% aggregate win at 8 workers from this
+    alone; the 1->4 raw-kernel ceiling in BENCH/BASELINE.md tracks the
+    packing on a 4-CPU host). Raising
     the threshold keeps image-sized buffers on the reusable sbrk heap.
     No-op on non-glibc platforms; results are unaffected either way."""
     import os

@@ -16,6 +16,9 @@ import zlib
 import numpy as np
 
 _MAGIC = b"IMG1"
+# Header pixel cap, checked before inflating (PIL's default
+# Image.MAX_IMAGE_PIXELS); the largest corpus image is ~72k px.
+MAX_PIXELS = 89_478_485
 
 
 def encode_image(img: np.ndarray) -> bytes:
@@ -27,11 +30,21 @@ def encode_image(img: np.ndarray) -> bytes:
 
 
 def decode_image(data: bytes) -> np.ndarray:
-    """Bytes -> grayscale uint8 HxW ndarray. Raises ValueError on corrupt input."""
+    """Bytes -> grayscale uint8 HxW ndarray. Raises ValueError on corrupt input.
+
+    Inflates at most h*w + 1 bytes, so a payload whose stream expands past
+    its header's size (a decompression bomb) costs no more memory than the
+    image it claims to be."""
     if len(data) < 12 or data[:4] != _MAGIC:
         raise ValueError("not an IMG1 payload")
     h, w = struct.unpack("<II", data[4:12])
-    raw = zlib.decompress(data[12:])
-    if len(raw) != h * w:
+    if h * w > MAX_PIXELS:
+        raise ValueError(f"IMG1 payload too large: {h}x{w} exceeds {MAX_PIXELS} pixels")
+    d = zlib.decompressobj()
+    try:
+        raw = d.decompress(data[12:], h * w + 1)
+    except zlib.error as e:
+        raise ValueError(f"corrupt IMG1 payload: {e}") from None
+    if not d.eof or len(raw) != h * w or d.unconsumed_tail or d.unused_data:
         raise ValueError("corrupt IMG1 payload: size mismatch")
     return np.frombuffer(raw, dtype=np.uint8).reshape(h, w)

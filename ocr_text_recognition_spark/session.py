@@ -19,6 +19,13 @@ from pyspark.sql import SparkSession
 ARROW_MAX_RECORDS_PER_BATCH = 256
 
 
+def default_cores() -> int:
+    """Local parallelism when the caller names none: ``SPARK_GRAFT_CPUS`` if
+    set, else the CPUs this process may run on (which honours a CPU pin or
+    cpuset, unlike ``os.cpu_count()``)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "ocr_text_recognition_spark",
     cores: int | None = None,
@@ -31,7 +38,7 @@ def get_spark(
     cluster the master comes from spark-submit and this arg is ignored.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
 

@@ -33,10 +33,12 @@ from datetime import datetime, timezone
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from ocr_text_recognition_spark.session import default_cores  # noqa: E402
+
 SRC_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCALE = int(os.environ.get("SPARK_GRAFT_SF1_SCALE", "10"))
 TRIALS = int(os.environ.get("SPARK_GRAFT_SF1_TRIALS", "2"))
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 EXTRACTION_DOCS = int(os.environ.get("SPARK_GRAFT_SF1_EXTRACT_DOCS", "40000"))
 
 # the most expensive bench entries (BENCH_r03 ranking) + the star join

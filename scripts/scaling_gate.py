@@ -1,0 +1,150 @@
+"""1->4 scaling gate for the extraction job: BASELINE.json's north rule asks
+for throughput scaling efficiency >= 0.8 between N and 4N executors.
+
+    python scripts/scaling_gate.py      # about 15 minutes on a 4-CPU host
+
+The benchmark's own runner (BENCHMARK.json's ``command``, workload
+extract_mixed, ``run_seconds``) runs in a child pinned to the first 1 and
+then the first 4 CPUs of this process; the runner sizes its Spark session
+from that affinity and checks every pass against the golden spans. Round r
+runs seed r at both levels, alternating which goes first; the gate is the
+median per-round (docs/s at 4 / docs/s at 1) / 4 against 0.8. The raw numpy
+kernel in 1 and 4 barrier-synchronised processes (median of 3; no Spark, no
+UDF boundary) is co-measured as the hardware ceiling. Writes
+BENCH/scaling.json and BENCH/BASELINE.md rendered from it; on fewer than 4
+CPUs or any incorrect or failed run it writes nothing and exits non-zero.
+"""
+
+from __future__ import annotations
+
+import json
+import multiprocessing as mp
+import os
+import statistics
+import subprocess
+import sys
+import time
+from datetime import datetime, timezone
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+WORKLOAD = "extract_mixed"
+LEVELS = (1, 4)
+ROUNDS = 5
+TARGET = 0.8
+KERNEL_IMAGES = 300
+KERNEL_REPEATS = 3
+
+
+def run_level(bench: dict, cpus: set[int], seed: int) -> float:
+    """docs/s of one benchmark run pinned to ``cpus``."""
+    cmd = bench["command"] + [
+        "--workload", WORKLOAD, "--seed", str(seed),
+        "--seconds", str(bench["run_seconds"]), "--trace", "0",
+    ]
+    out = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=1800,
+                         preexec_fn=lambda: os.sched_setaffinity(0, cpus))
+    lines = out.stdout.strip().splitlines()
+    result = json.loads(lines[-1]) if out.returncode == 0 and lines else {}
+    if result.get("correct") is not True or result.get("failed", 1) > 0:
+        sys.exit(f"scaling_gate: run at {len(cpus)} CPU(s), seed {seed} failed or was "
+                 f"incorrect; nothing written\n{out.stderr[-3000:]}")
+    return result["metrics"]["docs_per_s"]["value"]
+
+
+def _worker(payloads: list[bytes], cpu: int, barrier, out) -> None:
+    from ocr_text_recognition_spark.kernel import reference_kernel
+
+    os.sched_setaffinity(0, {cpu})
+    for p in payloads:  # warm pass: glyph memo, template tensors, heap
+        reference_kernel.recognize_media_bytes(p)
+    barrier.wait()  # every worker starts its timed pass together
+    t0 = time.perf_counter()
+    for p in payloads:
+        reference_kernel.recognize_media_bytes(p)
+    out.put(len(payloads) / (time.perf_counter() - t0))
+
+
+def ceiling(cpus: list[int], payloads: list[bytes], k: int) -> dict:
+    """Aggregate img/s of k independent kernel processes, median of repeats."""
+    aggs = []
+    for _ in range(KERNEL_REPEATS):
+        q, barrier = mp.Queue(), mp.Barrier(k)
+        procs = [mp.Process(target=_worker, args=(payloads, c, barrier, q)) for c in cpus[:k]]
+        for p in procs:
+            p.start()
+        aggs.append(round(sum(q.get() for _ in procs), 1))
+        for p in procs:
+            p.join()
+    return {"agg_imgs_per_s": statistics.median(aggs), "all_aggs": aggs}
+
+
+def render(s: dict) -> str:
+    lines = [
+        "# BENCH / BASELINE — scaling gate",
+        "",
+        f"Generated {s['generated_at']} by `python scripts/scaling_gate.py` from "
+        "`BENCH/scaling.json`.",
+        "",
+        f"**GATE {s['pair']}: efficiency {s['efficiency']:.3f} vs target >= {s['target']} -> "
+        f"{'PASS' if s['pass'] else 'FAIL'}** (raw-kernel ceiling {s['ceiling_efficiency']:.3f})",
+        "",
+        f"Workload `{s['workload']}`, {s['seconds']} s of timed passes per run.",
+        "",
+        "| round | seed | first | docs/s @1 | docs/s @4 | efficiency |",
+        "|---|---|---|---|---|---|",
+    ]
+    for i, r in enumerate(s["rounds"], 1):
+        lines.append(f"| {i} | {r['seed']} | {r['first']} | {r['docs_per_s_1']:.1f} | "
+                     f"{r['docs_per_s_4']:.1f} | {r['ratio']:.3f} |")
+    lines += ["", "| kernel processes | img/s (median) | all repeats |", "|---|---|---|"]
+    for k, c in s["ceiling"].items():
+        lines.append(f"| {k} | {c['agg_imgs_per_s']} | {c['all_aggs']} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    cpus = sorted(os.sched_getaffinity(0))
+    if len(cpus) < max(LEVELS):
+        sys.exit(f"scaling_gate: needs {max(LEVELS)} CPUs, this process has {len(cpus)}")
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+
+    from ocr_text_recognition_spark import corpus
+
+    payloads = corpus.make_corpus(KERNEL_IMAGES + 30, seed=3)[1]["content"].tolist()[:KERNEL_IMAGES]
+    ceil = {str(k): ceiling(cpus, payloads, k) for k in LEVELS}
+    print(json.dumps({"ceiling": ceil}), flush=True)
+
+    rounds = []
+    for seed in range(1, ROUNDS + 1):
+        order = LEVELS if seed % 2 else LEVELS[::-1]
+        dps = {k: run_level(bench, set(cpus[:k]), seed) for k in order}
+        ratio = (dps[4] / dps[1]) / 4
+        rounds.append({"seed": seed, "first": order[0], "docs_per_s_1": round(dps[1], 1),
+                       "docs_per_s_4": round(dps[4], 1), "ratio": round(ratio, 3)})
+        print(json.dumps(rounds[-1]), flush=True)
+
+    efficiency = round(statistics.median(r["ratio"] for r in rounds), 3)
+    s = {
+        "generated_at": datetime.now(timezone.utc).isoformat(timespec="seconds"),
+        "pair": "1->4",
+        "efficiency": efficiency,
+        "target": TARGET,
+        "pass": efficiency >= TARGET,
+        "ceiling_efficiency": round(ceil["4"]["agg_imgs_per_s"] / (4 * ceil["1"]["agg_imgs_per_s"]), 3),
+        "workload": WORKLOAD,
+        "seconds": bench["run_seconds"],
+        "rounds": rounds,
+        "ceiling": ceil,
+    }
+    with open(os.path.join(ROOT, "BENCH", "scaling.json"), "w") as f:
+        f.write(json.dumps(s, indent=1) + "\n")
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
+        f.write(render(s))
+    print(f"GATE 1->4: {efficiency} vs {TARGET} -> {'PASS' if s['pass'] else 'FAIL'}")
+
+
+if __name__ == "__main__":
+    main()

@@ -7,6 +7,10 @@ reference couldn't make (its OCR engines are nondeterministic; ours is not).
 
 from __future__ import annotations
 
+import struct
+import tracemalloc
+import zlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -46,8 +50,22 @@ class TestCodec:
         assert np.array_equal(decode_image(encode_image(img)), img)
 
     def test_corrupt_raises(self):
-        with pytest.raises(ValueError):
-            decode_image(b"not an image at all")
+        # ~200 MB of zeros behind a 10x10 header, compressed in chunks so the
+        # test itself never holds the inflated bytes
+        z = zlib.compressobj(9)
+        stream = b"".join(z.compress(bytes(2**20)) for _ in range(200)) + z.flush()
+        bomb = b"IMG1" + struct.pack("<II", 10, 10) + stream
+        over_cap = b"IMG1" + struct.pack("<II", 100_000, 100_000) + zlib.compress(b"\0")
+        bad_stream = b"IMG1" + struct.pack("<II", 2, 2) + b"not zlib"
+        for data in (b"not an image at all", bomb, over_cap, bad_stream):
+            tracemalloc.start()
+            try:
+                with pytest.raises(ValueError):
+                    decode_image(data)
+                peak = tracemalloc.get_traced_memory()[1]
+            finally:
+                tracemalloc.stop()
+            assert peak < 16 * 2**20
 
 
 class TestImageOps:

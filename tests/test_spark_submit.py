@@ -98,3 +98,13 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     )
     assert proc2.returncode == 0, proc2.stderr[-2000:]
     assert "processed buckets: []" in proc2.stdout
+
+
+def test_default_cores_follows_affinity(monkeypatch):
+    from ocr_text_recognition_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0})
+    assert session.default_cores() == 1
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_cores() == 3
