@@ -8,6 +8,15 @@ directories are overwritten whole and the ledger is appended only AFTER a
 bucket's output commits, a crash between the two reprocesses that bucket —
 deterministic kernel + whole-directory overwrite = exactly-once output.
 
+Each invocation recognizes every distinct (kind, media_ref) of the buckets
+it plans to process ONCE, into a persisted ref table (kind, media_ref,
+text) that every wave joins against; a wave scans only its documents and
+runs only the text UDF and reassembly. The table is a deterministic
+function of the payloads and lives only in the Spark cache of this
+invocation (unpersisted on exit, error or not), so it adds no state to
+resume from: a crash loses recomputable cache, never a committed bucket,
+and the output and ledger are written exactly as without it.
+
 On a real cluster the ledger lives in an Iceberg table and the output in an
 Iceberg-partitioned table (overwritePartitions); the parquet-directory
 layout here keeps identical semantics without the Iceberg runtime jar
@@ -16,16 +25,17 @@ layout here keeps identical semantics without the Iceberg runtime jar
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_text_recognition_spark.extraction.pipeline import run_extraction
+from ocr_text_recognition_spark.extraction.pipeline import assemble, recognize_refs, ref_locators
 
 DEFAULT_N_BUCKETS = 16
+LEDGER_SCHEMA = "bucket int, run_id string, completed_at double"
 
 
 def bucket_of(doc_id_col, n_buckets: int):
@@ -33,13 +43,26 @@ def bucket_of(doc_id_col, n_buckets: int):
 
 
 def completed_buckets(spark: SparkSession, ledger_dir: str) -> set[int]:
-    if not os.path.isdir(ledger_dir) or not any(
-        f.endswith(".parquet") for _, _, fs in os.walk(ledger_dir) for f in fs
-    ):
-        return set()
-    return {
-        r["bucket"] for r in spark.read.parquet(ledger_dir).select("bucket").distinct().collect()
-    }
+    """Buckets in the ledger at ``ledger_dir`` (any path Spark reads:
+    local, ``file://``, object store); none when the ledger does not exist
+    yet."""
+    try:
+        ledger = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return set()
+        raise
+    return {r["bucket"] for r in ledger.select("bucket").distinct().collect()}
+
+
+def ledger_frame(spark: SparkSession, wave: list[int], run_id: str) -> DataFrame:
+    """The ledger rows of one finished wave, built in the JVM (no Python
+    rows to pickle through an RDD)."""
+    return spark.range(0, 1, 1, 1).select(
+        F.explode(F.array(*[F.lit(int(b)) for b in wave])).alias("bucket"),
+        F.lit(run_id).alias("run_id"),
+        F.lit(time.time()).alias("completed_at"),
+    )
 
 
 def run_with_checkpoints(
@@ -57,7 +80,8 @@ def run_with_checkpoints(
     """Process the corpus bucket-wave by bucket-wave, checkpointing each.
 
     ``max_waves`` exists for kill/resume tests (process only the first K
-    waves, then 'crash'). Returns the buckets processed this invocation.
+    waves, then 'crash'); it also bounds the ref table, which covers only
+    the planned buckets. Returns the buckets processed this invocation.
 
     Concurrency contract: the ledger append is a separate write AFTER the
     bucket output commit, so a crash between them is safe (the bucket is
@@ -75,30 +99,33 @@ def run_with_checkpoints(
     waves = [todo[i : i + buckets_per_wave] for i in range(0, len(todo), buckets_per_wave)]
     if max_waves is not None:
         waves = waves[:max_waves]
+    if not waves:
+        return []
 
     docs_b = docs.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
+    planned = docs_b.filter(F.col("bucket").isin([b for w in waves for b in w])).drop("bucket")
+    ref_text = recognize_refs(spark, ref_locators(planned), media, preprocess_kwargs).persist()
     processed: list[int] = []
-    for wave in waves:
-        wave_docs = docs_b.filter(F.col("bucket").isin(wave))
-        result = run_extraction(
-            spark, wave_docs.drop("bucket"), media, preprocess_kwargs=preprocess_kwargs
-        ).withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-        # Whole-directory overwrite per bucket == idempotent re-run.
-        (
-            result.repartition("bucket")
-            .write.partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        # Ledger append happens strictly after the output commit.
-        ledger_rows = [
-            (int(b), run_id, float(time.time())) for b in wave
-        ]
-        spark.createDataFrame(
-            ledger_rows, "bucket int, run_id string, completed_at double"
-        ).coalesce(1).write.mode("append").parquet(ledger_dir)
-        processed.extend(wave)
+    try:
+        ref_text.count()  # materialize: the kernel runs here, before any wave
+        for wave in waves:
+            wave_docs = docs_b.filter(F.col("bucket").isin(wave)).drop("bucket")
+            result = assemble(wave_docs, ref_text).withColumn(
+                "bucket", bucket_of(F.col("doc_id"), n_buckets)
+            )
+            # Whole-directory overwrite per bucket == idempotent re-run.
+            (
+                result.repartition("bucket")
+                .write.partitionBy("bucket")
+                .option("partitionOverwriteMode", "dynamic")
+                .mode("overwrite")
+                .parquet(out_dir)
+            )
+            # Ledger append happens strictly after the output commit.
+            ledger_frame(spark, wave, run_id).write.mode("append").parquet(ledger_dir)
+            processed.extend(wave)
+    finally:
+        ref_text.unpersist()
     return processed
 
 

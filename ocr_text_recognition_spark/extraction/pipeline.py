@@ -14,6 +14,11 @@
            groupBy(doc_id) flatten + sort_array(offset)
       -> documents(doc_id, spans) out
 
+run_extraction is recognize_refs (the distinct-ref branch, ending in the
+(kind, media_ref, text) ref table) composed with assemble (everything
+else). The checkpointed job (checkpoint.py) calls the two apart: the ref
+table once per invocation, assemble once per wave.
+
 Scale notes (the design target is 10^12 docs / 100 TB):
 - The media join shuffles on media_ref; at scale both sides are bucketed
   on media_ref so the join is co-located (sources.write_bucketed /
@@ -130,6 +135,77 @@ def reassemble_spans(extracted: DataFrame, n_salt: int = DEFAULT_N_SALT) -> Data
     )
 
 
+def ref_locators(docs: DataFrame) -> DataFrame:
+    """documents -> (doc_id, kind, media_ref, offset) of every media and pdf
+    span: where each ref's text goes back, without the payloads."""
+    return (
+        explode_spans(docs)
+        .filter(F.col("kind").isin("media", "pdf"))
+        .select("doc_id", "kind", "media_ref", "offset")
+    )
+
+
+def recognize_refs(
+    spark: SparkSession,
+    refs: DataFrame,
+    media: DataFrame,
+    preprocess_kwargs: dict | None = None,
+) -> DataFrame:
+    """Ref locators -> (kind, media_ref, text), one row per distinct
+    (kind, media_ref): the kernel stage, run once per distinct payload.
+
+    kind='media' (OCR kernel) and kind='pdf' (layout parse) share ONE
+    distinct-ref pass: payloads are joined once and extract_ref_udf
+    dispatches per kind inside the Arrow batch. A ref with no media row
+    gets a NULL payload and text ''.
+
+    ``preprocess_kwargs``: kernel preprocessing overrides shipped into the
+    media UDF (e.g. {'binarizer': 'adaptive', 'rotate_portrait': True}
+    for photographed/scanned corpora); None keeps the default Otsu chain.
+    """
+    distinct_refs = refs.select("kind", "media_ref").distinct()
+    # Repartition the payloads (post-join, pre-UDF): the ref list is
+    # bytes-tiny but each ref costs real kernel CPU, so partitions must be
+    # sized by COMPUTE, not bytes, or AQE coalesces the UDF stage onto a
+    # few tasks.
+    parallelism = spark.sparkContext.defaultParallelism * 2
+    payloads = distinct_refs.join(media, "media_ref", "left").repartition(parallelism)
+    ref_udf = make_extract_ref_udf(**preprocess_kwargs) if preprocess_kwargs else extract_ref_udf
+    return payloads.select(
+        "kind",
+        "media_ref",
+        ref_udf(F.col("kind"), F.col("content")).alias("text"),
+    )
+
+
+def assemble(docs: DataFrame, ref_text: DataFrame) -> DataFrame:
+    """documents + recognized refs -> extracted documents (doc_id, spans).
+
+    Text spans go through the HTML extractor; media and pdf spans take
+    their text from ``ref_text`` (``recognize_refs``'s output), '' where
+    the ref has no row there. No payload and no kernel work is touched.
+    """
+    spans_text = (
+        explode_spans(docs)
+        .filter(F.col("kind") == "text")
+        .select(
+            "doc_id",
+            "kind",
+            extract_main_text_udf(F.col("text")).alias("text"),
+            "media_ref",
+            "offset",
+        )
+    )
+    spans_ref = ref_locators(docs).join(ref_text, ["kind", "media_ref"], "left").select(
+        "doc_id",
+        "kind",
+        F.coalesce(F.col("text"), F.lit("")).alias("text"),
+        "media_ref",
+        "offset",
+    )
+    return reassemble_spans(spans_text.unionByName(spans_ref))
+
+
 def run_extraction(
     spark: SparkSession,
     docs: DataFrame,
@@ -140,57 +216,14 @@ def run_extraction(
 
     Returns a DataFrame with the same (doc_id, spans) shape as the input,
     where every span's text has been replaced by its extraction result.
-
-    ``preprocess_kwargs``: kernel preprocessing overrides shipped into the
-    media UDF (e.g. {'binarizer': 'adaptive', 'rotate_portrait': True}
-    for photographed/scanned corpora); None keeps the default Otsu chain.
+    ``preprocess_kwargs`` as in ``recognize_refs``.
     """
-    spans = explode_spans(docs)
-
-    spans_text = spans.filter(F.col("kind") == "text").select(
-        "doc_id",
-        "kind",
-        extract_main_text_udf(F.col("text")).alias("text"),
-        "media_ref",
-        "offset",
-    )
-
-    # kind='media' (OCR kernel) and kind='pdf' (layout parse) share ONE
-    # distinct-ref pass: refs are deduped per (kind, media_ref), payloads
-    # joined once, and extract_ref_udf dispatches per kind inside the Arrow
-    # batch — one documents scan and one join-back for both modalities.
-    # The locator frame (doc_id, kind, media_ref, offset — no payloads, so
-    # tiny next to the corpus) feeds both the distinct-ref input and the
-    # join-back; persisting it keeps the documents table at two scans
-    # instead of three.
-    spans_ref = (
-        spans.filter(F.col("kind").isin("media", "pdf"))
-        .select("doc_id", "kind", "media_ref", "offset")
-        .persist()
-    )
-    distinct_refs = spans_ref.select("kind", "media_ref").distinct()
-    # Repartition the payloads (post-join, pre-UDF): the ref list is
-    # bytes-tiny but each ref costs real kernel CPU, so partitions must be
-    # sized by COMPUTE, not bytes, or AQE coalesces the UDF stage onto a
-    # few tasks.
-    parallelism = spark.sparkContext.defaultParallelism * 2
-    payloads = distinct_refs.join(media, "media_ref", "left").repartition(parallelism)
-    ref_udf = make_extract_ref_udf(**preprocess_kwargs) if preprocess_kwargs else extract_ref_udf
-    ref_text = payloads.select(
-        "kind",
-        "media_ref",
-        ref_udf(F.col("kind"), F.col("content")).alias("text"),
-    )
-    spans_ref_out = spans_ref.join(ref_text, ["kind", "media_ref"], "left").select(
-        "doc_id",
-        "kind",
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-        "media_ref",
-        "offset",
-    )
-
-    extracted = spans_text.unionByName(spans_ref_out)
-    return reassemble_spans(extracted)
+    # The locator frame (no payloads, so tiny next to the corpus) feeds
+    # both the distinct-ref input and assemble's join-back, which derives
+    # the same plan and so reads it from this cache: the documents table
+    # is scanned twice instead of three times.
+    refs = ref_locators(docs).persist()
+    return assemble(docs, recognize_refs(spark, refs, media, preprocess_kwargs))
 
 
 def run_extraction_demo(n_docs: int = 30, seed: int = 42) -> None:

@@ -2,10 +2,16 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from collections.abc import Iterator
 
-from ocr_text_recognition_spark.extraction import checkpoint, metrics
-from ocr_text_recognition_spark.io_pandas import pandas_to_spark
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType
+
+from ocr_text_recognition_spark.extraction import checkpoint, metrics, pipeline, udfs
+from ocr_text_recognition_spark.io_pandas import pandas_to_spark, write_corpus_parquet
 
 
 def test_kill_and_resume_exactly_once(spark, small_corpus, tmp_path):
@@ -46,6 +52,130 @@ def test_kill_and_resume_exactly_once(spark, small_corpus, tmp_path):
         for _, r in golden_pd.iterrows()
     }
     assert got == want
+
+
+def _as_dict(rows):
+    return {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
+        for r in rows
+    }
+
+
+def test_resume_through_file_uri_ledger(spark, small_corpus, tmp_path):
+    """A ledger addressed by URI (file:// here, s3a:// on a cluster) is read
+    through Spark: the resume skips the buckets it records."""
+    docs_pd, media_pd, golden_pd = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    out, ledger = (tmp_path / "out").as_uri(), (tmp_path / "ledger").as_uri()
+    assert ledger.startswith("file://")
+
+    first = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3, max_waves=1
+    )
+    assert checkpoint.completed_buckets(spark, ledger) == set(first)
+    rest = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3
+    )
+    assert sorted(rest) == sorted(set(range(8)) - set(first))
+    assert _as_dict(checkpoint.read_output(spark, out).collect()) == _as_dict(
+        r for _, r in golden_pd.iterrows()
+    )
+
+
+def _counting_ref_udf(spark):
+    """extract_ref_udf behind an accumulator that counts the rows it is
+    called on, summed over every executor task."""
+    calls = spark.sparkContext.accumulator(0)
+    inner = udfs.extract_ref_udf.func
+
+    @pandas_udf(StringType())
+    def counting_extract_ref_udf(
+        batches: Iterator[tuple[pd.Series, pd.Series]],
+    ) -> Iterator[pd.Series]:
+        for kinds, payloads in batches:
+            calls.add(len(kinds))
+            yield from inner(iter([(kinds, payloads)]))
+
+    return counting_extract_ref_udf, calls
+
+
+def _distinct_refs(docs, buckets, n_buckets):
+    in_buckets = docs.filter(checkpoint.bucket_of(F.col("doc_id"), n_buckets).isin(list(buckets)))
+    spans = pipeline.explode_spans(in_buckets).filter(F.col("kind").isin("media", "pdf"))
+    return spans.select("kind", "media_ref").distinct().count()
+
+
+def test_kernel_runs_once_per_distinct_ref(spark, small_corpus, tmp_path, monkeypatch):
+    """The ref UDF sees each distinct (kind, media_ref) of the planned
+    buckets exactly once per invocation, however many waves share it."""
+    docs_pd, media_pd, golden_pd = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    waves = [[0, 1, 2], [3, 4, 5], [6, 7]]
+    # refs shared across waves: a per-wave distinct pass would run more
+    per_wave = sum(_distinct_refs(docs, w, 8) for w in waves)
+    assert per_wave > _distinct_refs(docs, range(8), 8)
+
+    ref_udf, calls = _counting_ref_udf(spark)
+    monkeypatch.setattr(pipeline, "extract_ref_udf", ref_udf)
+    out, ledger = str(tmp_path / "out"), str(tmp_path / "ledger")
+    done = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3
+    )
+    assert done == [b for w in waves for b in w]
+    assert calls.value == _distinct_refs(docs, range(8), 8)
+    assert _as_dict(checkpoint.read_output(spark, out).collect()) == _as_dict(
+        r for _, r in golden_pd.iterrows()
+    )
+
+    # kill after one wave, then resume: each run recognizes only the refs
+    # of the buckets it plans
+    out, ledger = str(tmp_path / "out2"), str(tmp_path / "ledger2")
+    ref_udf, calls = _counting_ref_udf(spark)
+    monkeypatch.setattr(pipeline, "extract_ref_udf", ref_udf)
+    first = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3, max_waves=1
+    )
+    assert calls.value == _distinct_refs(docs, first, 8)
+
+    ref_udf, calls = _counting_ref_udf(spark)
+    monkeypatch.setattr(pipeline, "extract_ref_udf", ref_udf)
+    rest = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3
+    )
+    assert sorted(first + rest) == list(range(8))
+    assert calls.value == _distinct_refs(docs, rest, 8)
+
+
+def test_checkpointed_run_leaves_no_cached_frames(spark, small_corpus, tmp_path):
+    """The per-invocation ref table is released whether the run finishes
+    or its write raises."""
+    docs_pd, media_pd, _ = small_corpus
+    write_corpus_parquet(docs_pd, media_pd, str(tmp_path))
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    media = spark.read.parquet(str(tmp_path / "media.parquet"))
+
+    def persisted() -> int:  # each call takes a fresh snapshot of the map
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+
+    checkpoint.run_with_checkpoints(
+        spark, docs, media, str(tmp_path / "out"), str(tmp_path / "ledger"),
+        n_buckets=4, buckets_per_wave=2,
+    )
+    assert persisted() == before
+
+    blocker = tmp_path / "blocker"
+    blocker.write_text("a file where the output directory's parent should be")
+    with pytest.raises(Exception):
+        checkpoint.run_with_checkpoints(
+            spark, docs, media, str(blocker / "out"), str(tmp_path / "ledger2"),
+            n_buckets=4, buckets_per_wave=2,
+        )
+    assert not (tmp_path / "ledger2").exists()  # it failed at the first output write
+    assert persisted() == before
 
 
 def test_partition_metrics_totals(spark, small_corpus):

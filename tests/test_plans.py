@@ -79,6 +79,58 @@ def test_extraction_pipeline_stays_arrow(spark, small_corpus):
     assert "ArrowEvalPython" in plan
 
 
+def _plan_nodes(df) -> list[tuple[str, str]]:
+    """(name, one-line description) of every operator of ``df``'s physical
+    plan. A cached frame is one InMemoryTableScan leaf here: the plan that
+    built the cache is not walked, because it does not run again."""
+    nodes = []
+
+    def walk(node) -> None:
+        nodes.append((node.nodeName(), node.simpleString(1000)))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().sparkPlan())
+    return nodes
+
+
+def test_checkpoint_wave_joins_ref_table_only(spark, small_corpus, tmp_path):
+    """A checkpoint wave (assemble over a persisted ref table) runs the
+    text UDF and nothing of the kernel stage: no ref UDF, no media scan.
+    Its ledger rows are built in the JVM, with no Python RDD behind them."""
+    from ocr_text_recognition_spark.extraction.checkpoint import ledger_frame
+    from ocr_text_recognition_spark.extraction.pipeline import (
+        assemble,
+        recognize_refs,
+        ref_locators,
+    )
+    from ocr_text_recognition_spark.io_pandas import write_corpus_parquet
+
+    docs_pd, media_pd, _ = small_corpus
+    write_corpus_parquet(docs_pd, media_pd, str(tmp_path))
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    media = spark.read.parquet(str(tmp_path / "media.parquet"))
+    ref_text = recognize_refs(spark, ref_locators(docs), media).persist()
+    try:
+        ref_text.count()
+        nodes = _plan_nodes(assemble(docs, ref_text))
+    finally:
+        ref_text.unpersist()
+    python = [desc for name, desc in nodes if "EvalPython" in name]
+    assert [name for name, _ in nodes if "EvalPython" in name] == ["ArrowEvalPython"]
+    assert "extract_main_text_udf" in python[0]
+    assert not any("extract_ref_udf" in desc for _, desc in nodes)
+    assert "InMemoryTableScan" in [name for name, _ in nodes]
+    scans = [desc for name, desc in nodes if name.startswith("Scan")]
+    assert scans and all("ReadSchema: struct<doc_id:string,spans:" in d for d in scans), scans
+
+    ledger = ledger_frame(spark, [0, 5], "run")
+    assert ledger.schema.simpleString() == "struct<bucket:int,run_id:string,completed_at:double>"
+    plan = _plan(ledger)
+    assert "ExistingRDD" not in plan and "EvalPython" not in plan, plan
+
+
 def test_topn_uses_window_group_limit(spark, entry):
     """Spark's WindowGroupLimit pushes rank<=N below the final sort — the
     difference between shuffling N rows per group and ALL rows."""
