@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import uuid
 
 
 def main() -> None:
@@ -40,6 +41,10 @@ def main() -> None:
 
     if args.adaptive_block != 11 and args.binarizer != "adaptive":
         ap.error("--adaptive-block requires --binarizer adaptive")
+    if args.n_buckets < 1 or args.buckets_per_wave < 1:
+        ap.error("--n-buckets and --buckets-per-wave must be >= 1")
+    # one lineage key for the ledger rows and the metrics rows
+    run_id = args.run_id or uuid.uuid4().hex[:12]
     preprocess_kwargs = None
     if (
         args.binarizer != "otsu"
@@ -92,15 +97,13 @@ def main() -> None:
         ledger_dir=args.ledger,
         n_buckets=args.n_buckets,
         buckets_per_wave=args.buckets_per_wave,
-        run_id=args.run_id,
+        run_id=run_id,
         preprocess_kwargs=preprocess_kwargs,
     )
     print(f"processed buckets: {processed}")
     if args.metrics:
         out = spark.read.parquet(args.out)
-        partition_metrics(out, run_id=args.run_id or "job").write.mode("append").parquet(
-            args.metrics
-        )
+        partition_metrics(out, run_id=run_id).write.mode("append").parquet(args.metrics)
 
 
 if __name__ == "__main__":

@@ -2,14 +2,10 @@
 
 The reference is strictly request/response; the north rule's
 'streaming-shaped' requirement is resumability, which the batch pipeline
-covers with the bucket ledger. These entry points additionally let the SAME
-extraction logic run incrementally over arriving document files:
+covers with the bucket ledger (``extraction.checkpoint.run_with_checkpoints``
+is the one resumable extraction driver). These entry points are the
+streaming operator family over arriving files and event streams, e.g.:
 
-- ``stream_extraction``: file-source stream over parquet span batches ->
-  foreachBatch(run_extraction) -> parquet, with Trigger.AvailableNow so a
-  scheduled run drains whatever arrived and exits (the idiomatic
-  batch-on-streaming-source pattern). Spark's own checkpointing makes each
-  micro-batch exactly-once alongside our ledger.
 - ``windowed_event_counts``: watermarked tumbling-window aggregation over an
   event stream (late data dropped past the watermark) — the streaming twin
   of q26_windowed_events.
@@ -19,38 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ocr_text_recognition_spark.extraction.pipeline import run_extraction
-from ocr_text_recognition_spark.schemas import DOCUMENTS_SCHEMA
-
-
-def stream_extraction(
-    spark: SparkSession,
-    docs_dir: str,
-    media: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Incrementally extract newly-arrived document parquet files.
-
-    Returns the started StreamingQuery; callers awaitTermination()."""
-    stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(docs_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = run_extraction(batch_df.sparkSession, batch_df, media)
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(out_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup(

@@ -99,6 +99,25 @@ def test_rotate_portrait_opt_in():
     assert default != EXPECTED
 
 
+def test_rotate90_if_portrait():
+    portrait = np.zeros((30, 10), np.uint8)
+    portrait[0, 0] = 255  # top-left marker
+    rot = imageops.rotate90_if_portrait(portrait)
+    assert rot.shape == (10, 30)
+    assert rot[0, -1] == 255  # CW: top-left -> top-right
+    landscape = np.zeros((10, 30), np.uint8)
+    assert imageops.rotate90_if_portrait(landscape) is landscape
+
+
+def test_sharpen_increases_edge_contrast():
+    img = np.full((20, 20), 200, np.uint8)
+    img[8:12, 8:12] = 100
+    sharp = imageops.sharpen(img)
+    # edges get pushed apart; flat interior far from edges unchanged
+    assert sharp[0, 0] == 200
+    assert int(sharp[8, 8]) < 100  # dark pixel next to bright edge gets darker
+
+
 def test_recognize_media_bytes_kwargs_passthrough():
     from ocr_text_recognition_spark.kernel.imgcodec import encode_image
 

@@ -47,6 +47,7 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     write_corpus_parquet(docs_pd, media_pd, corpus_dir)
     out_dir = str(tmp_path / "out")
     ledger_dir = str(tmp_path / "ledger")
+    metrics_dir = str(tmp_path / "metrics")
 
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # engine must come from --py-files, not the repo
@@ -72,6 +73,8 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
         out_dir,
         "--ledger",
         ledger_dir,
+        "--metrics",
+        metrics_dir,
         "--n-buckets",
         "4",
         "--buckets-per-wave",
@@ -92,12 +95,45 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     bad = [d for d in want if got[d] != want[d]]
     assert not bad, f"{len(bad)} docs mismatch after spark-submit, first: {bad[:1]}"
 
+    # metrics rows carry the ledger's run_id, so the two join on it
+    def run_ids(path):
+        tbl = ds.dataset(path, format="parquet").to_table(columns=["run_id"])
+        return set(tbl["run_id"].to_pylist())
+
+    ledger_ids = run_ids(ledger_dir)
+    assert len(ledger_ids) == 1
+    assert run_ids(metrics_dir) == ledger_ids
+
     # second invocation with an intact ledger is a no-op (idempotent resume)
     proc2 = subprocess.run(
         cmd, cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=600
     )
     assert proc2.returncode == 0, proc2.stderr[-2000:]
     assert "processed buckets: []" in proc2.stdout
+
+
+def test_extract_job_rejects_bucket_flags_below_one(monkeypatch):
+    """--n-buckets / --buckets-per-wave below 1 exit with a usage error
+    before any Spark session starts."""
+    import importlib.util
+
+    from ocr_text_recognition_spark import session
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark session started before flag validation")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    job_path = os.path.join(REPO, "jobs", "extract.py")
+    spec = importlib.util.spec_from_file_location("extract_job", job_path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    required = ["--docs", "d", "--media", "m", "--out", "o", "--ledger", "l"]
+    for flag in ("--n-buckets", "--buckets-per-wave"):
+        for value in ("0", "-1"):
+            monkeypatch.setattr(sys, "argv", ["extract.py", *required, flag, value])
+            with pytest.raises(SystemExit) as exc:
+                job.main()
+            assert exc.value.code == 2, (flag, value)
 
 
 def test_default_cores_follows_affinity(monkeypatch):

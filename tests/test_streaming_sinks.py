@@ -1,43 +1,10 @@
-"""Streaming incremental extraction + sink round-trips."""
+"""Streaming operators + sink round-trips."""
 
 from __future__ import annotations
 
 import time
 
 from pyspark.sql import functions as F
-
-from ocr_text_recognition_spark.io_pandas import pandas_to_spark, write_corpus_parquet
-
-
-def test_stream_extraction_available_now(spark, small_corpus, tmp_path):
-    from ocr_text_recognition_spark.streaming.incremental import stream_extraction
-
-    docs_pd, media_pd, golden_pd = small_corpus
-    docs_dir = tmp_path / "docs_in"
-    docs_dir.mkdir()
-    # two arrival batches
-    write_corpus_parquet(docs_pd.iloc[:15], media_pd, str(docs_dir))
-    (docs_dir / "media.parquet").unlink()
-    write_corpus_parquet(docs_pd.iloc[15:].reset_index(drop=True), media_pd, str(tmp_path))
-    (tmp_path / "documents.parquet").rename(docs_dir / "documents2.parquet")
-
-    media = pandas_to_spark(spark, media_pd, "media")
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = stream_extraction(spark, str(docs_dir), media, out_dir, ckpt)
-    assert q.awaitTermination(600), "availableNow query did not finish"
-    time.sleep(0.5)
-
-    result = spark.read.parquet(out_dir)
-    assert result.select("doc_id").distinct().count() == len(docs_pd)
-    got = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in result.collect()
-    }
-    want = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for _, r in golden_pd.iterrows()
-    }
-    assert got == want
 
 
 def test_windowed_event_counts_batch_equivalence(spark):
@@ -81,92 +48,6 @@ def test_sinks_roundtrip(spark, tmp_path):
     sinks.write_grades_json(cells, str(tmp_path / "grades"))
     line = spark.read.text(str(tmp_path / "grades")).collect()[0][0]
     assert '"subject":"Math"' in line and "8.5" in line
-
-
-def test_stateful_span_assembly_across_microbatches(spark, small_corpus, tmp_path):
-    """applyInPandasWithState: spans arriving in separate micro-batches are
-    held in per-doc state and emitted, offset-ordered, only once the doc's
-    eof marker arrives."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ocr_text_recognition_spark.streaming.stateful import assemble_spans_stream
-
-    docs_pd, _, _ = small_corpus
-    docs_pd = docs_pd.iloc[:8]
-    rows = []
-    for _, r in docs_pd.iterrows():
-        for s in r["spans"]:
-            rows.append((r["doc_id"], s["kind"], s["text"], s["media_ref"], s["offset"]))
-        rows.append((r["doc_id"], "eof", None, None, 2**30))
-
-    schema = pa.schema(
-        [("doc_id", pa.string()), ("kind", pa.string()), ("text", pa.string()),
-         ("media_ref", pa.string()), ("offset", pa.int32())]
-    )
-    in_dir = tmp_path / "spans_in"
-    in_dir.mkdir()
-    # batch 1: first half of every doc's spans (no eof); batch 2: the rest + eof
-    half = [r for r in rows if r[1] != "eof" and r[4] < 3]
-    rest = [r for r in rows if r not in half]
-    for name, chunk in (("b1.parquet", half), ("b2.parquet", rest)):
-        pq.write_table(pa.Table.from_arrays(
-            [pa.array([c[i] for c in chunk], schema.field(i).type) for i in range(5)],
-            schema=schema), str(in_dir / name))
-
-    out_dir = str(tmp_path / "assembled_out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def start_query():
-        stream = spark.readStream.schema(
-            "doc_id string, kind string, text string, media_ref string, offset int"
-        ).option("maxFilesPerTrigger", 1).parquet(str(in_dir))
-        return (assemble_spans_stream(stream)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append").trigger(availableNow=True).start())
-
-    def sink_docs() -> int:
-        try:
-            return spark.read.parquet(out_dir).select("doc_id").distinct().count()
-        except Exception:
-            return 0  # sink not created yet
-
-    # applyInPandasWithState + ProcessingTimeTimeout keeps scheduling
-    # timeout batches past the drained input on Spark 4.1, so neither
-    # availableNow termination nor processAllAvailable() ever quiesces:
-    # poll the sink (parquet — survives restarts) for the expected output,
-    # then stop explicitly. Spark 4.1's state-store maintenance can also
-    # transiently kill the query with CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT;
-    # a production job restarts from the checkpoint, so the test does too
-    # (bounded retries) — state recovery across restarts is part of the
-    # operator contract being exercised.
-    q = start_query()
-    restarts = 0
-    deadline = time.time() + 240
-    while time.time() < deadline:
-        if sink_docs() == len(docs_pd):
-            break
-        if q.exception() is not None and restarts < 2:
-            restarts += 1
-            q = start_query()
-        time.sleep(2)
-    q.stop()
-    q.awaitTermination(60)
-
-    got = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    want = {
-        r["doc_id"]: sorted(
-            [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]],
-            key=lambda t: t[3],
-        )
-        for _, r in docs_pd.iterrows()
-    }
-    assert got == want
 
 
 def test_watermark_drops_late_events(spark, tmp_path):
@@ -257,115 +138,6 @@ def test_excel_edge_sink_size_gate(spark, tmp_path):
     import os
 
     assert not os.path.exists(path)
-
-
-def test_stateful_orphan_state_expires(spark, tmp_path):
-    """A doc whose eof never arrives must not leak state forever: with a
-    short processing-time timeout its state expires between micro-batches
-    and the doc is never emitted. An eof arriving AFTER expiry finds no
-    state and zero spans, so it emits NOTHING — the expired doc vanishes
-    entirely instead of surfacing as a phantom empty document."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ocr_text_recognition_spark.streaming.stateful import assemble_spans_stream
-
-    schema = pa.schema(
-        [("doc_id", pa.string()), ("kind", pa.string()), ("text", pa.string()),
-         ("media_ref", pa.string()), ("offset", pa.int32())]
-    )
-
-    def write(name, chunk):
-        pq.write_table(pa.Table.from_arrays(
-            [pa.array([c[i] for c in chunk], schema.field(i).type) for i in range(5)],
-            schema=schema), str(in_dir / name))
-
-    in_dir = tmp_path / "orphan_in"
-    in_dir.mkdir()
-    # b1: orphan gets spans but NO eof; docA completes normally
-    write("b1.parquet", [
-        ("orphan", "text", "lost", "", 0),
-        ("docA", "text", "hello", "", 0),
-        ("docA", "eof", None, None, 2**30),
-    ])
-    # b2: unrelated doc completes — a later batch fires orphan's timeout
-    write("b2.parquet", [
-        ("docB", "text", "world", "", 0),
-        ("docB", "eof", None, None, 2**30),
-    ])
-
-    import time as _time
-
-    ckpt = str(tmp_path / "orphan_ckpt")
-    out_dir = str(tmp_path / "orphan_out")
-
-    def run_pass():
-        # a FILE sink (not memory): pass 2 must RESUME from pass 1's
-        # checkpoint, and the memory sink does not support recovery
-        stream = spark.readStream.schema(
-            "doc_id string, kind string, text string, media_ref string, offset int"
-        ).option("maxFilesPerTrigger", 1).parquet(str(in_dir))
-        out = assemble_spans_stream(stream, orphan_timeout_ms=1)
-        return (out.writeStream.format("parquet").option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append").trigger(availableNow=True).start())
-
-    # PASS 1 (b1+b2 only — b3 does not exist yet, so there is no race
-    # between the 1ms timeout and b3's eof): timeout batches keep firing
-    # after the data batches (availableNow + ProcessingTimeTimeout never
-    # self-terminates — see test_stateful_span_assembly), so poll until
-    # the orphan's expiry is OBSERVED in the state-operator metrics
-    # (numRowsRemoved >= 1: docA/docB never stored state, their
-    # remove() is a no-op on the store, so the first stored-row removal
-    # is the orphan) and the standing state is empty.
-    q = run_pass()
-    deadline = _time.time() + 240
-    expired = False
-    while _time.time() < deadline:
-        removed = sum(
-            s["numRowsRemoved"]
-            for p in q.recentProgress
-            for s in p.get("stateOperators", [])
-        )
-        last = q.lastProgress
-        total = (last or {}).get("stateOperators", [{}])
-        n_live = total[0].get("numRowsTotal", -1) if total else -1
-        if removed >= 1 and n_live == 0:
-            expired = True
-            break
-        _time.sleep(1)
-    q.stop()
-    q.awaitTermination(60)
-    assert expired, "orphan state never expired within 240s"
-
-    got = {
-        r["doc_id"]: [(s["kind"], s["text"]) for s in r["spans"]]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got["docA"] == [("text", "hello")]
-    assert got["docB"] == [("text", "world")]
-    assert "orphan" not in got  # expiry must not emit a partial doc
-
-    # PASS 2: only now does orphan's eof arrive — written AFTER expiry is
-    # a committed fact in the checkpoint, so the late-eof path is tested
-    # deterministically. Same checkpoint; fresh memory sink.
-    write("b3.parquet", [("orphan", "eof", None, None, 2**30)])
-    q = run_pass()
-    deadline = _time.time() + 240
-    while _time.time() < deadline:
-        # b3's numInputRows reports only after its batch COMMITS, so once
-        # the total reaches 1 any phantom orphan row would already be in
-        # the sink.
-        if sum(p["numInputRows"] for p in q.recentProgress) >= 1:
-            break
-        _time.sleep(1)
-    q.stop()
-    q.awaitTermination(60)
-
-    got2 = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
-    # the orphan's pre-expiry span is GONE and its late eof is suppressed:
-    # no row at all for the expired doc (not even an empty-span one)
-    assert "orphan" not in got2
 
 
 def test_stream_dedup_incremental(spark, tmp_path):
