@@ -4,25 +4,28 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is forced
 end-to-end with the noop sink (computes everything, writes nothing).
 
-The extraction benchmark additionally reports docs/sec and chars/sec for
-the full interleaved pipeline (kernel UDFs + salted reassembly) over a
-deterministic generated corpus; corpus generation happens off the clock.
+The extraction block reports docs/sec and chars/sec of the full
+interleaved pipeline (kernel UDFs + salted reassembly) from one run of the
+layered benchmark's ``extract_mixed`` workload (``perfbench/run.py``), in a
+child process pinned to the same CPU count.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from ocr_text_recognition_spark.session import default_cores  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = default_cores()
-EXTRACTION_DOCS = int(os.environ.get("SPARK_GRAFT_EXTRACT_DOCS", "8000"))
+EXTRACT_RUN = ["--workload", "extract_mixed", "--seed", "1", "--seconds", "15", "--trace", "0"]
 
 BENCH_QUERIES = [
     "q01_pricing_summary",
@@ -103,8 +106,6 @@ def force(df) -> None:
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from ocr_text_recognition_spark import corpus
-    from ocr_text_recognition_spark.extraction.pipeline import run_extraction
     from ocr_text_recognition_spark.session import get_spark
 
     spark = get_spark("bench", cores=CPUS, shuffle_partitions=CPUS)
@@ -133,68 +134,24 @@ def main() -> None:
             secs.append(time.time() - t0)
         timings[name] = round(statistics.median(secs), 3)
 
-    # --- extraction pipeline (docs/sec, chars/sec) — corpus materialized to
-    # parquet off the clock (the job's real input shape), UDF workers warmed
-    # on a slice so the timing is steady-state. The relational section's
-    # accumulated persist() blocks (q17/q41 signatures across trials) are
-    # dropped first: leftover storage memory + GC pressure otherwise costs
-    # the kernel stage ~30% for reasons unrelated to the pipeline itself.
-    spark.catalog.clearCache()
-    import tempfile
-
-    from ocr_text_recognition_spark.io_pandas import write_corpus_parquet
-
-    corpus_dir = tempfile.mkdtemp(prefix="bench_corpus_")
-    docs_pd, media_pd = corpus.make_corpus(EXTRACTION_DOCS, seed=42)
-    write_corpus_parquet(docs_pd, media_pd, corpus_dir)
-    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
-    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
-    # full warm-up run: python workers, JIT, codegen — then MEDIAN of
-    # TRIALS timed steady-state passes (same noise rationale as above)
-    run_extraction(spark, docs, media).write.format("noop").mode("overwrite").save()
-    from pyspark.sql import functions as F
-
-    ext_secs = []
-    stats = None
-    for _ in range(TRIALS):
-        t0 = time.time()
-        out = run_extraction(spark, docs, media)
-        stats = out.agg(
-            F.count("*").alias("docs"),
-            F.sum(F.size("spans")).alias("spans"),
-            F.sum(
-                F.aggregate(
-                    F.transform("spans", lambda s: F.length(s["text"])),
-                    F.lit(0),
-                    lambda a, b: a + b,
-                )
-            ).alias("chars"),
-        ).collect()[0]
-        ext_secs.append(time.time() - t0)
-    ext_sec = statistics.median(ext_secs)
-    timings["extraction_pipeline"] = round(ext_sec, 3)
-
-    # north-star correctness metric, off the clock: exact span-sequence
-    # match rate (kind, text, media_ref, order) vs the plain-python golden
-    # path over the SAME corpus the throughput was measured on
-    golden_pd = corpus.make_golden(docs_pd, media_pd)
-    want = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for _, r in golden_pd.iterrows()
-    }
-    got = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in run_extraction(spark, docs, media).collect()
-    }
-    matched = sum(1 for d in want if got.get(d) == want[d])
-    span_match_rate = matched / max(len(want), 1)
+    # --- extraction pipeline (docs/sec, chars/sec): the layered benchmark's
+    # extract_mixed run, which checks every pass against the golden spans
+    spark.stop()
+    cpus = sorted(os.sched_getaffinity(0))[:CPUS]
+    subprocess.run([sys.executable, os.path.join(ROOT, "perfbench", "run.py"), *EXTRACT_RUN],
+                   cwd=ROOT, check=True, stdout=subprocess.DEVNULL, timeout=1800,
+                   preexec_fn=lambda: os.sched_setaffinity(0, cpus))
+    with open(os.path.join(ROOT, ".perfbench_out", "extract_mixed-seed1-trace0.json")) as f:
+        run = json.load(f)
+    m, shape = run["metrics"], run["context"]["corpus"]
+    timings["extraction_pipeline"] = round(m["wall_s"], 3)
 
     # scaling-gate verdict from the most recent scripts/scaling_gate.py run
     # (BENCH/scaling.json): the north rule's N -> 4N number travels with the
     # bench line. Only the six verdict fields, so the one-line artifact stays
     # short; generated_at makes a stale gate run visible as such.
     scaling = None
-    scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "scaling.json")
+    scaling_path = os.path.join(ROOT, "BENCH", "scaling.json")
     if os.path.exists(scaling_path):
         with open(scaling_path) as f:
             s = json.load(f)
@@ -213,12 +170,12 @@ def main() -> None:
                 "queries": timings,
                 "sf": SF_DIR.rstrip("/").split("sf")[-1],
                 "extraction": {
-                    "docs": int(stats["docs"]),
-                    "spans": int(stats["spans"]),
-                    "chars": int(stats["chars"]),
-                    "docs_per_sec": round(stats["docs"] / ext_sec, 2),
-                    "chars_per_sec": round(stats["chars"] / ext_sec, 1),
-                    "span_match_rate": span_match_rate,
+                    "docs": shape["docs"],
+                    "spans": shape["text_spans"] + shape["ref_spans"],
+                    "chars": round(m["chars_per_s"] * m["wall_s"]),
+                    "docs_per_sec": round(m["docs_per_s"], 2),
+                    "chars_per_sec": round(m["chars_per_s"], 1),
+                    "span_match_rate": 1 - run["result"]["failed"] / run["result"]["attempted"],
                 },
                 "scaling": scaling,
                 "notes": BENCH_NOTES,

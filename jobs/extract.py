@@ -10,6 +10,12 @@
         [--buckets-per-wave 8] [--run-id ID]
 
 Every run resumes idempotently: buckets already in the ledger are skipped.
+The ledger gets one ``(bucket, run_id, completed_at, wave_s)`` row per
+bucket it commits. With ``--metrics``, the run appends one ``(run_id,
+bucket, docs, spans, chars_decoded, media_spans)`` row per bucket it
+processed, counted in the JVM from those buckets' output only; it joins
+the ledger on ``(run_id, bucket)``. A run that processes nothing appends
+nothing.
 """
 
 from __future__ import annotations
@@ -63,7 +69,7 @@ def main() -> None:
         }
 
     from ocr_text_recognition_spark.extraction.checkpoint import run_with_checkpoints
-    from ocr_text_recognition_spark.extraction.metrics import partition_metrics
+    from ocr_text_recognition_spark.extraction.metrics import bucket_metrics
     from ocr_text_recognition_spark.extraction.pipeline import extraction_session_conf
     from ocr_text_recognition_spark.session import default_cores, get_spark
 
@@ -101,9 +107,8 @@ def main() -> None:
         preprocess_kwargs=preprocess_kwargs,
     )
     print(f"processed buckets: {processed}")
-    if args.metrics:
-        out = spark.read.parquet(args.out)
-        partition_metrics(out, run_id=run_id).write.mode("append").parquet(args.metrics)
+    if args.metrics and processed:
+        bucket_metrics(spark, args.out, processed, run_id).write.mode("append").parquet(args.metrics)
 
 
 if __name__ == "__main__":

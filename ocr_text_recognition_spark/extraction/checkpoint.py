@@ -2,11 +2,14 @@
 
 The unit of work is a doc_id hash bucket. Output is laid out as
 ``out_dir/bucket=N/`` (one directory per bucket, written atomically by
-Spark's committer); a ledger parquet records completed buckets. Resume
-anti-joins the ledger and reprocesses only missing buckets. Because bucket
-directories are overwritten whole and the ledger is appended only AFTER a
-bucket's output commits, a crash between the two reprocesses that bucket —
-deterministic kernel + whole-directory overwrite = exactly-once output.
+Spark's committer); a ledger parquet records each completed bucket as a
+``(bucket, run_id, completed_at, wave_s)`` row, ``wave_s`` being the wall
+time of the wave that committed it (NULL in ledgers written before the
+column existed). Resume reprocesses only the buckets missing from the
+ledger. Because bucket directories are overwritten whole and the ledger is
+appended only AFTER a bucket's output commits, a crash between the two
+reprocesses that bucket — deterministic kernel + whole-directory overwrite
+= exactly-once output.
 
 Each invocation recognizes every distinct (kind, media_ref) of the buckets
 it plans to process ONCE, into a persisted ref table (kind, media_ref,
@@ -16,6 +19,9 @@ function of the payloads and lives only in the Spark cache of this
 invocation (unpersisted on exit, error or not), so it adds no state to
 resume from: a crash loses recomputable cache, never a committed bucket,
 and the output and ledger are written exactly as without it.
+
+The job's per-bucket counts (``metrics.bucket_metrics``) are keyed by the
+same ``(run_id, bucket)`` as the ledger rows, so the two join 1:1.
 
 On a real cluster the ledger lives in an Iceberg table and the output in an
 Iceberg-partitioned table (overwritePartitions); the parquet-directory
@@ -35,7 +41,7 @@ from pyspark.sql import functions as F
 from ocr_text_recognition_spark.extraction.pipeline import assemble, recognize_refs, ref_locators
 
 DEFAULT_N_BUCKETS = 16
-LEDGER_SCHEMA = "bucket int, run_id string, completed_at double"
+LEDGER_SCHEMA = "bucket int, run_id string, completed_at double, wave_s double"
 
 
 def bucket_of(doc_id_col, n_buckets: int):
@@ -55,13 +61,21 @@ def completed_buckets(spark: SparkSession, ledger_dir: str) -> set[int]:
     return {r["bucket"] for r in ledger.select("bucket").distinct().collect()}
 
 
-def ledger_frame(spark: SparkSession, wave: list[int], run_id: str) -> DataFrame:
-    """The ledger rows of one finished wave, built in the JVM (no Python
-    rows to pickle through an RDD)."""
+def bucket_frame(spark: SparkSession, buckets: list[int]) -> DataFrame:
+    """One ``bucket`` row per entry of ``buckets``, built in the JVM (no
+    Python rows to pickle through an RDD)."""
     return spark.range(0, 1, 1, 1).select(
-        F.explode(F.array(*[F.lit(int(b)) for b in wave])).alias("bucket"),
+        F.explode(F.array(*[F.lit(int(b)) for b in buckets])).alias("bucket")
+    )
+
+
+def ledger_frame(spark: SparkSession, wave: list[int], run_id: str, wave_s: float) -> DataFrame:
+    """The ledger rows of one finished wave that took ``wave_s`` seconds."""
+    return bucket_frame(spark, wave).select(
+        "bucket",
         F.lit(run_id).alias("run_id"),
         F.lit(time.time()).alias("completed_at"),
+        F.lit(wave_s).alias("wave_s"),
     )
 
 
@@ -109,6 +123,7 @@ def run_with_checkpoints(
     try:
         ref_text.count()  # materialize: the kernel runs here, before any wave
         for wave in waves:
+            t0 = time.perf_counter()
             wave_docs = docs_b.filter(F.col("bucket").isin(wave)).drop("bucket")
             result = assemble(wave_docs, ref_text).withColumn(
                 "bucket", bucket_of(F.col("doc_id"), n_buckets)
@@ -122,7 +137,8 @@ def run_with_checkpoints(
                 .parquet(out_dir)
             )
             # Ledger append happens strictly after the output commit.
-            ledger_frame(spark, wave, run_id).write.mode("append").parquet(ledger_dir)
+            wave_s = time.perf_counter() - t0
+            ledger_frame(spark, wave, run_id, wave_s).write.mode("append").parquet(ledger_dir)
             processed.extend(wave)
     finally:
         ref_text.unpersist()

@@ -1,58 +1,38 @@
-"""Per-partition lineage + extraction metrics (north star, BASELINE.json:6):
-chars decoded, span counts, CER vs reference — keyed by (run_id,
-partition_id) so each physical partition's contribution is auditable.
+"""Per-bucket lineage + extraction metrics (north star, BASELINE.json:6):
+docs, spans, chars decoded and media spans of each bucket a run committed,
+keyed by ``(run_id, bucket)`` like the checkpoint ledger rows they join;
+CER vs reference. Everything here stays in the JVM.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_text_recognition_spark.schemas import METRICS_SCHEMA
+from ocr_text_recognition_spark.extraction.checkpoint import bucket_frame
 
 
-def partition_metrics(extracted_docs: DataFrame, run_id: str) -> DataFrame:
-    """(doc_id, spans) -> one metrics row per physical partition.
+def bucket_metrics(spark: SparkSession, out_dir: str, buckets: list[int], run_id: str) -> DataFrame:
+    """One ``(run_id, bucket, docs, spans, chars_decoded, media_spans)`` row
+    per bucket of ``buckets`` (zeros for a bucket without documents).
 
-    mapInPandas keeps this a single pass piggybacked on the data; the
-    TaskContext partition id is the lineage key.
+    The read of the checkpointed output at ``out_dir`` is pruned to the
+    ``bucket=N`` directories of ``buckets``: O(processed), not O(corpus).
     """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time
-
-        from pyspark import TaskContext
-
-        t0 = time.time()
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        docs = spans = chars = media = 0
-        for pdf in batches:
-            docs += len(pdf)
-            for span_list in pdf["spans"]:
-                spans += len(span_list)
-                for s in span_list:
-                    chars += len(s["text"] or "")
-                    media += 1 if s["kind"] == "media" else 0
-        elapsed = max(time.time() - t0, 1e-9)
-        yield pd.DataFrame(
-            [
-                {
-                    "run_id": run_id,
-                    "partition_id": pid,
-                    "docs": docs,
-                    "spans": spans,
-                    "chars_decoded": chars,
-                    "media_spans": media,
-                    "elapsed_sec": elapsed,
-                    "spans_per_sec": spans / elapsed,
-                }
-            ]
-        )
-
-    return extracted_docs.mapInPandas(gen, METRICS_SCHEMA)
+    out = spark.read.parquet(out_dir).filter(F.col("bucket").isin([int(b) for b in buckets]))
+    counts = out.groupBy("bucket").agg(
+        F.count("*").alias("docs"),
+        F.sum(F.size("spans")).alias("spans"),
+        F.sum(
+            F.aggregate("spans", F.lit(0), lambda n, s: n + F.coalesce(F.length(s["text"]), F.lit(0)))
+        ).alias("chars_decoded"),
+        F.sum(F.size(F.filter("spans", lambda s: s["kind"] == "media"))).alias("media_spans"),
+    )
+    return bucket_frame(spark, buckets).join(counts, "bucket", "left").select(
+        F.lit(run_id).alias("run_id"),
+        "bucket",
+        *[F.coalesce(c, F.lit(0)).alias(c) for c in ("docs", "spans", "chars_decoded", "media_spans")],
+    )
 
 
 def cer_vs_reference(extracted: DataFrame, golden: DataFrame) -> DataFrame:

@@ -27,16 +27,3 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("content", T.BinaryType(), True),
     ]
 )
-
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("docs", T.LongType(), False),
-        T.StructField("spans", T.LongType(), False),
-        T.StructField("chars_decoded", T.LongType(), False),
-        T.StructField("media_spans", T.LongType(), False),
-        T.StructField("elapsed_sec", T.DoubleType(), False),
-        T.StructField("spans_per_sec", T.DoubleType(), False),
-    ]
-)

@@ -178,27 +178,6 @@ def test_checkpointed_run_leaves_no_cached_frames(spark, small_corpus, tmp_path)
     assert persisted() == before
 
 
-def test_partition_metrics_totals(spark, small_corpus):
-    docs_pd, media_pd, golden_pd = small_corpus
-    golden = pandas_to_spark(spark, golden_pd, "documents")
-    m = metrics.partition_metrics(golden, run_id="t1")
-    agg = m.agg(
-        F.sum("docs").alias("docs"),
-        F.sum("spans").alias("spans"),
-        F.sum("chars_decoded").alias("chars"),
-        F.sum("media_spans").alias("media"),
-    ).collect()[0]
-    want_spans = int(golden_pd["spans"].map(len).sum())
-    want_chars = sum(len(s["text"]) for _, r in golden_pd.iterrows() for s in r["spans"])
-    want_media = sum(s["kind"] == "media" for _, r in golden_pd.iterrows() for s in r["spans"])
-    assert (agg["docs"], agg["spans"], agg["chars"], agg["media"]) == (
-        len(golden_pd),
-        want_spans,
-        want_chars,
-        want_media,
-    )
-
-
 def test_cer_zero_on_exact_match(spark, small_corpus):
     _, _, golden_pd = small_corpus
     golden = pandas_to_spark(spark, golden_pd, "documents")
@@ -215,11 +194,73 @@ def test_cer_detects_divergence(spark):
     assert abs(row["cer"] - 0.25) < 1e-9
 
 
-def test_partition_metrics_rates(spark, small_corpus):
-    """spans/sec + elapsed are per-partition (north star: lineage includes
-    throughput) and positive wherever spans were processed."""
-    _, _, golden_pd = small_corpus
-    golden = pandas_to_spark(spark, golden_pd, "documents")
-    rows = metrics.partition_metrics(golden, run_id="t2").collect()
-    assert all(r["elapsed_sec"] > 0 for r in rows)
-    assert all(r["spans_per_sec"] > 0 for r in rows if r["spans"] > 0)
+def _golden_bucket_counts(spark, golden_pd, n_buckets):
+    """{bucket: (docs, spans, chars, media spans)} of the golden spans,
+    grouped by ``checkpoint.bucket_of``."""
+    ids = spark.createDataFrame([(d,) for d in golden_pd["doc_id"]], "doc_id string")
+    bucket = {
+        r["doc_id"]: r["b"]
+        for r in ids.select("doc_id", checkpoint.bucket_of(F.col("doc_id"), n_buckets).alias("b")).collect()
+    }
+    want = {b: [0, 0, 0, 0] for b in range(n_buckets)}
+    for _, r in golden_pd.iterrows():
+        c = want[bucket[r["doc_id"]]]
+        c[0] += 1
+        c[1] += len(r["spans"])
+        c[2] += sum(len(s["text"] or "") for s in r["spans"])
+        c[3] += sum(s["kind"] == "media" for s in r["spans"])
+    return {b: tuple(c) for b, c in want.items()}
+
+
+def test_bucket_metrics_count_each_bucket_once_across_resumes(spark, small_corpus, tmp_path):
+    """Kill, resume, no-op resume: the metrics of the runs that processed
+    buckets cover every bucket exactly once, with the golden counts, and
+    join the ledger 1:1 on (run_id, bucket)."""
+    docs_pd, media_pd, golden_pd = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    out, ledger = str(tmp_path / "out"), str(tmp_path / "ledger")
+
+    rows, runs = [], []
+    for run_id, max_waves in (("kill", 1), ("resume", None), ("noop", None)):
+        done = checkpoint.run_with_checkpoints(
+            spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3,
+            max_waves=max_waves, run_id=run_id,
+        )
+        runs.append(done)
+        if done:  # as jobs/extract.py: a run that processed nothing adds no rows
+            rows += metrics.bucket_metrics(spark, out, done, run_id).collect()
+    assert len(runs[0]) == 3 and len(runs[1]) == 5 and runs[2] == []
+
+    assert sorted(r["bucket"] for r in rows) == list(range(8))
+    got = {r["bucket"]: (r["docs"], r["spans"], r["chars_decoded"], r["media_spans"]) for r in rows}
+    assert got == _golden_bucket_counts(spark, golden_pd, 8)
+
+    ledger_rows = spark.read.schema(checkpoint.LEDGER_SCHEMA).parquet(ledger).collect()
+    assert sorted((r["run_id"], r["bucket"]) for r in ledger_rows) == sorted(
+        (r["run_id"], r["bucket"]) for r in rows
+    )
+    assert all(r["wave_s"] > 0 for r in ledger_rows)
+
+
+def test_resume_over_ledger_without_wave_s(spark, small_corpus, tmp_path):
+    """A ledger written before ``wave_s`` existed still resumes: its
+    buckets are skipped, new rows append with ``wave_s``, old rows read it
+    as NULL."""
+    docs_pd, media_pd, _ = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    out, ledger = str(tmp_path / "out"), str(tmp_path / "ledger")
+    spark.createDataFrame(
+        [(b, "old", 1.0) for b in (0, 1, 2)], "bucket int, run_id string, completed_at double"
+    ).write.parquet(ledger)
+
+    done = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3, run_id="new"
+    )
+    assert done == [3, 4, 5, 6, 7]
+    assert checkpoint.completed_buckets(spark, ledger) == set(range(8))
+    rows = spark.read.schema(checkpoint.LEDGER_SCHEMA).parquet(ledger).collect()
+    assert sorted(r["bucket"] for r in rows) == list(range(8))
+    assert all(r["wave_s"] is None for r in rows if r["run_id"] == "old")
+    assert all(r["wave_s"] > 0 for r in rows if r["run_id"] == "new")

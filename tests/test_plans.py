@@ -125,8 +125,10 @@ def test_checkpoint_wave_joins_ref_table_only(spark, small_corpus, tmp_path):
     scans = [desc for name, desc in nodes if name.startswith("Scan")]
     assert scans and all("ReadSchema: struct<doc_id:string,spans:" in d for d in scans), scans
 
-    ledger = ledger_frame(spark, [0, 5], "run")
-    assert ledger.schema.simpleString() == "struct<bucket:int,run_id:string,completed_at:double>"
+    ledger = ledger_frame(spark, [0, 5], "run", 0.5)
+    assert ledger.schema.simpleString() == (
+        "struct<bucket:int,run_id:string,completed_at:double,wave_s:double>"
+    )
     plan = _plan(ledger)
     assert "ExistingRDD" not in plan and "EvalPython" not in plan, plan
 
@@ -246,6 +248,26 @@ def test_hot_shingles_partial_topk(spark, entry):
     plan = _plan(entry.queries()["q49_hot_shingles"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_bucket_metrics_jvm_only_and_pruned(spark, small_corpus, tmp_path):
+    """The job's per-bucket metrics run no Python and read only the
+    ``bucket=N`` directories of the buckets asked for."""
+    from pyspark.sql import functions as F
+
+    from ocr_text_recognition_spark.extraction.checkpoint import bucket_of
+    from ocr_text_recognition_spark.extraction.metrics import bucket_metrics
+    from ocr_text_recognition_spark.io_pandas import pandas_to_spark
+
+    _, _, golden_pd = small_corpus
+    out = str(tmp_path / "out")
+    golden = pandas_to_spark(spark, golden_pd, "documents")
+    golden.withColumn("bucket", bucket_of(F.col("doc_id"), 8)).write.partitionBy("bucket").parquet(out)
+    m = bucket_metrics(spark, out, [1, 3], "run")
+    plan = _plan(m)
+    assert "EvalPython" not in plan and "MapInPandas" not in plan, plan
+    assert "bucket" in plan.split("PartitionFilters:", 1)[1].split("\n", 1)[0], plan
+    assert sorted(r["bucket"] for r in m.collect()) == [1, 3]
 
 
 def test_partitioned_table_scan_prunes(spark, tmp_path, entry):

@@ -95,21 +95,31 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     bad = [d for d in want if got[d] != want[d]]
     assert not bad, f"{len(bad)} docs mismatch after spark-submit, first: {bad[:1]}"
 
-    # metrics rows carry the ledger's run_id, so the two join on it
-    def run_ids(path):
-        tbl = ds.dataset(path, format="parquet").to_table(columns=["run_id"])
-        return set(tbl["run_id"].to_pylist())
+    # one metrics row per processed bucket, under the ledger's one run_id,
+    # joining the ledger on (run_id, bucket); counts sum to the golden's
+    def table(path):
+        return ds.dataset(path, format="parquet").to_table().to_pandas()
 
-    ledger_ids = run_ids(ledger_dir)
-    assert len(ledger_ids) == 1
-    assert run_ids(metrics_dir) == ledger_ids
+    ledger = table(ledger_dir)
+    assert ledger["run_id"].nunique() == 1
+    assert (ledger["wave_s"] > 0).all()
+    m = table(metrics_dir)
+    assert sorted(zip(m["run_id"], m["bucket"])) == sorted(zip(ledger["run_id"], ledger["bucket"]))
+    assert sorted(m["bucket"]) == [0, 1, 2, 3]
+    assert (m["docs"].sum(), m["spans"].sum(), m["chars_decoded"].sum()) == (
+        len(golden_pd),
+        sum(len(spans) for spans in golden_pd["spans"]),
+        sum(len(s["text"] or "") for spans in golden_pd["spans"] for s in spans),
+    )
 
-    # second invocation with an intact ledger is a no-op (idempotent resume)
+    # second invocation with an intact ledger is a no-op (idempotent
+    # resume) and appends no metrics rows
     proc2 = subprocess.run(
         cmd, cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=600
     )
     assert proc2.returncode == 0, proc2.stderr[-2000:]
     assert "processed buckets: []" in proc2.stdout
+    assert sorted(map(tuple, table(metrics_dir).values.tolist())) == sorted(map(tuple, m.values.tolist()))
 
 
 def test_extract_job_rejects_bucket_flags_below_one(monkeypatch):
