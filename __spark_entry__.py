@@ -2085,16 +2085,17 @@ def q107_substring_dups(spark, sf_dir):
 
 
 def q108_bpe_merges(spark, sf_dir):
-    """BPE tokenizer merge training (operators/lm.py bpe_train):
-    frequency-weighted distinct-word table, per-iteration pair-count
-    aggregate + JVM-side fold merge pass, driver-known 1-row argmax per
-    merge (the IVF-codebook shape). Iterative-greedy — no SQL oracle;
-    rows-only in the sweep, pinned instead against a plain-Python twin
-    in tests/test_operators.py::test_bpe_train_matches_python_twin."""
-    from ocr_text_recognition_spark.operators.lm import bpe_train
+    """BPE tokenizer merge training, one merge per iteration
+    (operators/lm.py bpe_train_batched at batch_size=1 — exact sequential
+    BPE): frequency-weighted distinct-word table, per-iteration pair-count
+    aggregate + JVM-side fold merge pass, driver-known argmax per merge
+    (the IVF-codebook shape). Iterative-greedy — no SQL oracle; rows-only
+    in the sweep, pinned instead against a plain-Python twin in
+    tests/test_operators.py::test_bpe_train_matches_python_twin."""
+    from ocr_text_recognition_spark.operators.lm import bpe_train_batched
 
     docs = _t(spark, sf_dir, "documents")
-    return bpe_train(docs, "doc_id", "text", n_merges=8)
+    return bpe_train_batched(docs, "doc_id", "text", n_merges=8, batch_size=1)
 
 
 def q109_bpe_merges_batched(spark, sf_dir):
@@ -2107,7 +2108,7 @@ def q109_bpe_merges_batched(spark, sf_dir):
     in the sweep, pinned against a plain-Python twin sharing the
     selection function
     (tests/test_operators.py::test_bpe_train_batched_matches_python_twin)
-    and against sequential bpe_train at batch_size=1."""
+    and, at batch_size=1, against independent sequential BPE (q108)."""
     from ocr_text_recognition_spark.operators.lm import bpe_train_batched
 
     docs = _t(spark, sf_dir, "documents")

@@ -26,14 +26,20 @@ import uuid
 
 
 def main() -> None:
+    from ocr_text_recognition_spark.extraction.checkpoint import (
+        DEFAULT_BUCKETS_PER_WAVE,
+        DEFAULT_N_BUCKETS,
+        run_with_checkpoints,
+    )
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", required=True)
     ap.add_argument("--media", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--ledger", required=True)
     ap.add_argument("--metrics", default=None)
-    ap.add_argument("--n-buckets", type=int, default=256)
-    ap.add_argument("--buckets-per-wave", type=int, default=8)
+    ap.add_argument("--n-buckets", type=int, default=DEFAULT_N_BUCKETS)
+    ap.add_argument("--buckets-per-wave", type=int, default=DEFAULT_BUCKETS_PER_WAVE)
     ap.add_argument("--run-id", default=None)
     # kernel preprocessing for photographed/scanned corpora
     # (enhanced_table_ocr_service.py:58-60 / ocr_model.py:66-68 semantics)
@@ -68,7 +74,6 @@ def main() -> None:
             "deskew": args.deskew,
         }
 
-    from ocr_text_recognition_spark.extraction.checkpoint import run_with_checkpoints
     from ocr_text_recognition_spark.extraction.metrics import bucket_metrics
     from ocr_text_recognition_spark.extraction.pipeline import extraction_session_conf
     from ocr_text_recognition_spark.session import default_cores, get_spark

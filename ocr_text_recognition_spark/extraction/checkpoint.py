@@ -38,9 +38,11 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_text_recognition_spark.extraction.pipeline import assemble, recognize_refs, ref_locators
+from ocr_text_recognition_spark.extraction.pipeline import assemble, recognize_refs
 
-DEFAULT_N_BUCKETS = 16
+# The job's defaults (jobs/extract.py --n-buckets / --buckets-per-wave).
+DEFAULT_N_BUCKETS = 256
+DEFAULT_BUCKETS_PER_WAVE = 8
 LEDGER_SCHEMA = "bucket int, run_id string, completed_at double, wave_s double"
 
 
@@ -86,7 +88,7 @@ def run_with_checkpoints(
     out_dir: str,
     ledger_dir: str,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    buckets_per_wave: int = 4,
+    buckets_per_wave: int = DEFAULT_BUCKETS_PER_WAVE,
     max_waves: int | None = None,
     run_id: str | None = None,
     preprocess_kwargs: dict | None = None,
@@ -118,7 +120,7 @@ def run_with_checkpoints(
 
     docs_b = docs.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
     planned = docs_b.filter(F.col("bucket").isin([b for w in waves for b in w])).drop("bucket")
-    ref_text = recognize_refs(spark, ref_locators(planned), media, preprocess_kwargs).persist()
+    ref_text = recognize_refs(spark, planned, media, preprocess_kwargs).persist()
     processed: list[int] = []
     try:
         ref_text.count()  # materialize: the kernel runs here, before any wave

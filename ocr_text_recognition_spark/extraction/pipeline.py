@@ -1,23 +1,23 @@
 """The distributed extraction pipeline (SURVEY.md §3.4).
 
     read documents(doc_id, spans)                [scan; columns pruned]
-      -> posexplode_outer(spans)                 [narrow]
-      -> branch on kind:
-           text      -> extract_main_text_udf    [Arrow batches]
-           media|pdf -> distinct (kind, media_ref)  [dedup: each distinct
-                        join media on media_ref      payload processed ONCE]
-                        extract_ref_udf (dispatch: OCR kernel | layout parse)
-                        join results back
-      -> unionByName
+      -> posexplode_outer(spans)                 [narrow; a document with
+                                                  no spans keeps one row]
+      -> extract_main_text_udf on every span     [Arrow batches, fused
+         that is not media|pdf                    with the scan]
+      -> left join the ref table on (kind, media_ref): media|pdf spans
+         take its text, '' where the ref has no row there
       -> salted two-phase reassembly:            [explicit skew handling]
            groupBy(doc_id, salt) partial collect
            groupBy(doc_id) flatten + sort_array(offset)
       -> documents(doc_id, spans) out
 
-run_extraction is recognize_refs (the distinct-ref branch, ending in the
-(kind, media_ref, text) ref table) composed with assemble (everything
-else). The checkpointed job (checkpoint.py) calls the two apart: the ref
-table once per invocation, assemble once per wave.
+The ref table (kind, media_ref, text) comes from recognize_refs: the
+distinct media|pdf refs of the documents, joined to their payloads and
+run through extract_ref_udf (OCR kernel | layout parse), each distinct
+payload processed ONCE. run_extraction is recognize_refs composed with
+assemble; the checkpointed job (checkpoint.py) calls the two apart: the
+ref table once per invocation, assemble once per wave.
 
 Scale notes (the design target is 10^12 docs / 100 TB):
 - The media join shuffles on media_ref; at scale both sides are bucketed
@@ -46,13 +46,16 @@ from ocr_text_recognition_spark.extraction.udfs import (
 )
 
 DEFAULT_N_SALT = 8
+# Span kinds whose text is recognized from a media payload; every other
+# kind is HTML-ish text.
+REF_KINDS = ("media", "pdf")
 
 # Spark's stock scan/shuffle sizing targets byte-bound analytics
 # (128 MiB splits, 64 MiB post-shuffle partitions). The extraction job is
 # COMPUTE-bound per row — a 200-byte media_ref row costs ~4 ms of kernel
 # CPU — so byte-sized defaults under-split small-to-medium inputs: a
 # 6 MiB documents file becomes a 1-task scan and AQE coalesces the
-# post-kernel union stage to 2-3 tasks no matter the core count
+# post-kernel stages to 2-3 tasks no matter the core count
 # (profiled: perfbench/run.py --trace 1; the stage-49 serialization in
 # BENCH/gate_attempts_r5.md attempt 6). These are the stock defaults we
 # clamp back to at scale.
@@ -89,12 +92,15 @@ def extraction_session_conf(input_bytes: int, cores: int) -> dict[str, str]:
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
-    """documents -> one row per span (doc_id, kind, text, media_ref, offset)."""
+    """documents -> one row per span (doc_id, pos, kind, text, media_ref,
+    offset). A document with no spans keeps one row with a NULL ``pos``
+    (and NULL span columns), so it reaches reassembly as ``spans = []``."""
     return docs.select(
         "doc_id",
-        F.explode("spans").alias("span"),
+        F.posexplode_outer("spans").alias("pos", "span"),
     ).select(
         "doc_id",
+        "pos",
         F.col("span.kind").alias("kind"),
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
@@ -103,19 +109,16 @@ def explode_spans(docs: DataFrame) -> DataFrame:
 
 
 def reassemble_spans(extracted: DataFrame, n_salt: int = DEFAULT_N_SALT) -> DataFrame:
-    """(doc_id, kind, text, media_ref, offset) -> (doc_id, spans) with spans
-    sorted by offset. Two-phase salted aggregation so one media-heavy doc
-    cannot pin a single reducer."""
+    """(doc_id, pos, kind, text, media_ref, offset) -> (doc_id, spans) with
+    spans sorted by offset; a row with a NULL ``pos`` is a document without
+    spans and contributes no span. Two-phase salted aggregation so one
+    media-heavy doc cannot pin a single reducer."""
+    span = F.struct(F.col("offset"), F.col("kind"), F.col("text"), F.col("media_ref"))
     partial = (
         extracted.withColumn("salt", F.pmod(F.hash("offset"), F.lit(n_salt)))
         .groupBy("doc_id", "salt")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    F.col("offset"), F.col("kind"), F.col("text"), F.col("media_ref")
-                )
-            ).alias("part")
-        )
+        # collect_list skips the NULL a span-less document's row maps to
+        .agg(F.collect_list(F.when(F.col("pos").isNotNull(), span)).alias("part"))
     )
     return (
         partial.groupBy("doc_id")
@@ -135,24 +138,15 @@ def reassemble_spans(extracted: DataFrame, n_salt: int = DEFAULT_N_SALT) -> Data
     )
 
 
-def ref_locators(docs: DataFrame) -> DataFrame:
-    """documents -> (doc_id, kind, media_ref, offset) of every media and pdf
-    span: where each ref's text goes back, without the payloads."""
-    return (
-        explode_spans(docs)
-        .filter(F.col("kind").isin("media", "pdf"))
-        .select("doc_id", "kind", "media_ref", "offset")
-    )
-
-
 def recognize_refs(
     spark: SparkSession,
-    refs: DataFrame,
+    docs: DataFrame,
     media: DataFrame,
     preprocess_kwargs: dict | None = None,
 ) -> DataFrame:
-    """Ref locators -> (kind, media_ref, text), one row per distinct
-    (kind, media_ref): the kernel stage, run once per distinct payload.
+    """documents -> (kind, media_ref, text), one row per distinct
+    (kind, media_ref) of their media and pdf spans: the kernel stage, run
+    once per distinct payload.
 
     kind='media' (OCR kernel) and kind='pdf' (layout parse) share ONE
     distinct-ref pass: payloads are joined once and extract_ref_udf
@@ -163,7 +157,12 @@ def recognize_refs(
     media UDF (e.g. {'binarizer': 'adaptive', 'rotate_portrait': True}
     for photographed/scanned corpora); None keeps the default Otsu chain.
     """
-    distinct_refs = refs.select("kind", "media_ref").distinct()
+    distinct_refs = (
+        explode_spans(docs)
+        .filter(F.col("kind").isin(*REF_KINDS))
+        .select("kind", "media_ref")
+        .distinct()
+    )
     # Repartition the payloads (post-join, pre-UDF): the ref list is
     # bytes-tiny but each ref costs real kernel CPU, so partitions must be
     # sized by COMPUTE, not bytes, or AQE coalesces the UDF stage onto a
@@ -179,31 +178,25 @@ def recognize_refs(
 
 
 def assemble(docs: DataFrame, ref_text: DataFrame) -> DataFrame:
-    """documents + recognized refs -> extracted documents (doc_id, spans).
+    """documents + recognized refs -> extracted documents (doc_id, spans),
+    in one pass over the spans.
 
-    Text spans go through the HTML extractor; media and pdf spans take
-    their text from ``ref_text`` (``recognize_refs``'s output), '' where
-    the ref has no row there. No payload and no kernel work is touched.
+    Media and pdf spans take their text from ``ref_text``
+    (``recognize_refs``'s output), '' where the ref has no row there; every
+    other span goes through the HTML extractor. No payload and no kernel
+    work is touched.
     """
-    spans_text = (
-        explode_spans(docs)
-        .filter(F.col("kind") == "text")
-        .select(
-            "doc_id",
-            "kind",
-            extract_main_text_udf(F.col("text")).alias("text"),
-            "media_ref",
-            "offset",
+    is_ref = F.col("kind").isin(*REF_KINDS)
+    spans = explode_spans(docs).withColumn(
+        "main_text", extract_main_text_udf(F.when(is_ref, F.lit(None)).otherwise(F.col("text")))
+    )
+    refs = ref_text.withColumnRenamed("text", "ref_text")
+    text = F.when(is_ref, F.coalesce("ref_text", F.lit(""))).otherwise(F.col("main_text"))
+    return reassemble_spans(
+        spans.join(refs, ["kind", "media_ref"], "left").select(
+            "doc_id", "pos", "kind", text.alias("text"), "media_ref", "offset"
         )
     )
-    spans_ref = ref_locators(docs).join(ref_text, ["kind", "media_ref"], "left").select(
-        "doc_id",
-        "kind",
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-        "media_ref",
-        "offset",
-    )
-    return reassemble_spans(spans_text.unionByName(spans_ref))
 
 
 def run_extraction(
@@ -218,12 +211,7 @@ def run_extraction(
     where every span's text has been replaced by its extraction result.
     ``preprocess_kwargs`` as in ``recognize_refs``.
     """
-    # The locator frame (no payloads, so tiny next to the corpus) feeds
-    # both the distinct-ref input and assemble's join-back, which derives
-    # the same plan and so reads it from this cache: the documents table
-    # is scanned twice instead of three times.
-    refs = ref_locators(docs).persist()
-    return assemble(docs, recognize_refs(spark, refs, media, preprocess_kwargs))
+    return assemble(docs, recognize_refs(spark, docs, media, preprocess_kwargs))
 
 
 def run_extraction_demo(n_docs: int = 30, seed: int = 42) -> None:

@@ -122,54 +122,6 @@ def collocations(
     )
 
 
-def bpe_merge_pass(
-    words: DataFrame, left: str, right: str, seq_col: str = "sym"
-) -> DataFrame:
-    """One BPE merge applied to every symbol sequence: replace each
-    non-overlapping, leftmost-first adjacent occurrence of (left, right)
-    with the concatenated symbol. The greedy left-to-right scan is a
-    JVM-side ``aggregate`` fold with a (out, prev) struct accumulator —
-    no Python, no explode; one narrow map over the vocabulary table."""
-    merged = left + right
-    out_t = "array<string>"
-
-    def step(acc, x):
-        return (
-            F.when(
-                acc["prev"].isNotNull()
-                & (acc["prev"] == F.lit(left))
-                & (x == F.lit(right)),
-                F.struct(
-                    F.array_append(acc["out"], F.lit(merged)).alias("out"),
-                    F.lit(None).cast("string").alias("prev"),
-                ),
-            ).otherwise(
-                F.struct(
-                    F.when(
-                        acc["prev"].isNotNull(),
-                        F.array_append(acc["out"], acc["prev"]),
-                    )
-                    .otherwise(acc["out"])
-                    .alias("out"),
-                    x.alias("prev"),
-                )
-            )
-        )
-
-    folded = F.aggregate(
-        F.col(seq_col),
-        F.struct(
-            F.lit([]).cast(out_t).alias("out"),
-            F.lit(None).cast("string").alias("prev"),
-        ),
-        step,
-        lambda acc: F.when(
-            acc["prev"].isNotNull(), F.array_append(acc["out"], acc["prev"])
-        ).otherwise(acc["out"]),
-    )
-    return words.withColumn(seq_col, folded)
-
-
 def bpe_merge_pass_multi(
     words: DataFrame, pairs: list[tuple[str, str]], seq_col: str = "sym"
 ) -> DataFrame:
@@ -177,9 +129,10 @@ def bpe_merge_pass_multi(
     (left, right) in ``pairs`` shares no symbol (nor its merged output
     string) with any other, so at most one pair can match a given
     (prev, x) and one left-to-right scan applies all of them exactly as
-    M sequential ``bpe_merge_pass`` calls would. Same (out, prev)
-    struct-accumulator ``aggregate`` as the single-pair pass — still no
-    Python, still one narrow map over the vocabulary table."""
+    M sequential single-pair merges would. The greedy leftmost-first,
+    non-overlapping scan is a JVM-side ``aggregate`` fold with a
+    (out, prev) struct accumulator — no Python, no explode; one narrow
+    map over the vocabulary table."""
     out_t = "array<string>"
 
     def step(acc, x):
@@ -273,16 +226,25 @@ def bpe_train_batched(
     batch_size: int = 8,
     candidate_factor: int = 8,
 ) -> DataFrame:
-    """Batched BPE merge training — the production-merge-count variant
-    of ``bpe_train``. Plain BPE is inherently sequential (one argmax →
-    one merge → recount), which on Spark means one driver collect + one
-    job PER MERGE: fine at 8 merges, a 30k-job chain for a real
-    tokenizer. The standard distributed compromise batches it: per
-    iteration, collect the top ``batch_size * candidate_factor`` pairs
-    (one small job), greedily select up to ``batch_size`` pairwise
-    symbol-disjoint pairs (``select_disjoint_batch``), and apply them in
-    ONE fold pass (``bpe_merge_pass_multi``) — driver round-trips drop
-    from ``n_merges`` to ``n_merges / batch_size``.
+    """Byte-pair-encoding MERGE TRAINING on Spark — the tokenizer-
+    construction half that ``vocab_encode`` (q95) consumes. Classic BPE
+    (Sennrich et al. 2016): start from characters + an end-of-word
+    marker, repeatedly merge the globally most frequent adjacent symbol
+    pair, weighting by word frequency. All work runs on the DISTINCT-WORD
+    table with a frequency column, so corpus size only enters through the
+    one (word, freq) aggregation; localCheckpoint per iteration truncates
+    the lineage the way dup_clusters does.
+
+    Plain BPE is inherently sequential (one argmax → one merge →
+    recount), which on Spark means one driver collect + one job PER
+    MERGE: fine at 8 merges, a 30k-job chain for a real tokenizer. The
+    standard distributed compromise batches it: per iteration, collect
+    the top ``batch_size * candidate_factor`` pairs (one small job,
+    ordered count desc, then lexicographic pair — deterministic),
+    greedily select up to ``batch_size`` pairwise symbol-disjoint pairs
+    (``select_disjoint_batch``), and apply them in ONE fold pass
+    (``bpe_merge_pass_multi``) — driver round-trips drop from
+    ``n_merges`` to ``n_merges / batch_size``.
 
     Exactness: within a batch the selected merges are mutually
     independent (disjoint symbols ⇒ applying one cannot change another's
@@ -290,9 +252,11 @@ def bpe_train_batched(
     sequence can still differ from strict one-at-a-time BPE when a merge
     CREATES a brand-new pair whose count would out-rank a later batch
     member — the known, accepted deviation of every batched BPE trainer;
-    ``batch_size=1`` degenerates to exact sequential behavior (pinned by
-    test). Twin-tested against a plain-Python implementation sharing
-    ``select_disjoint_batch``.
+    ``batch_size=1`` is exact sequential BPE (pinned against an
+    independent plain-Python implementation). Iterative-greedy merging
+    is not expressible as one SQL query, so this operator ships with
+    plain-Python twin tests instead of a DuckDB oracle; its queries()
+    entries are rows-only in the sweep.
 
     Returns (merge_rank, left, right, pair_count) — pair_count as of the
     batch's shared snapshot."""
@@ -333,63 +297,3 @@ def bpe_train_batched(
         merges, "merge_rank int, left string, right string, pair_count bigint"
     )
 
-
-def bpe_train(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_merges: int = 8,
-) -> DataFrame:
-    """Byte-pair-encoding MERGE TRAINING on Spark — the tokenizer-
-    construction half that ``vocab_encode`` (q95) consumes. Classic BPE
-    (Sennrich et al. 2016): start from characters + an end-of-word
-    marker, repeatedly merge the globally most frequent adjacent symbol
-    pair, weighting by word frequency.
-
-    Scale shape (the standard trick): all work runs on the DISTINCT-WORD
-    table with a frequency column — corpus size only enters through the
-    one (word, freq) aggregation, and each iteration is two small jobs
-    over the vocabulary: a pair-count aggregate and the fold-based merge
-    pass (``bpe_merge_pass``). The per-iteration argmax is ONE collected
-    row (count desc, then lexicographic pair — deterministic), the same
-    driver-known-scalar shape as the IVF codebook: the merge decision is
-    inherently sequential, so it lives on the driver while every scan
-    stays distributed. localCheckpoint per iteration truncates the
-    lineage the way dup_clusters does.
-
-    Iterative-greedy merging is not expressible as one SQL query, so
-    this operator ships with a plain-Python twin test instead of a
-    DuckDB oracle (the sanctioned path for iterative algorithms); its
-    queries() entry is rows-only in the sweep.
-
-    Returns (merge_rank, left, right, pair_count)."""
-    words = _word_symbols(docs, text_col)
-    merges: list[tuple[int, str, str, int]] = []
-    cur = words.localCheckpoint()
-    for rank in range(1, n_merges + 1):
-        pairs = (
-            cur.select(
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("sym"), 1, F.size("sym") - 1),
-                        F.slice(F.col("sym"), 2, F.size("sym") - 1),
-                        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                    )
-                ).alias("p"),
-                "freq",
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("freq").alias("pair_count"))
-            .orderBy(F.desc("pair_count"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not pairs:
-            break
-        row = pairs[0]
-        merges.append((rank, row["l"], row["r"], int(row["pair_count"])))
-        cur = bpe_merge_pass(cur, row["l"], row["r"]).localCheckpoint()
-    spark = docs.sparkSession
-    return spark.createDataFrame(
-        merges, "merge_rank int, left string, right string, pair_count bigint"
-    )

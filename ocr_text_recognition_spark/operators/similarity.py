@@ -165,9 +165,9 @@ def _nearest_centroid_arrow(vec: Column, centroids: list[tuple[int, list[float]]
     argmax cosine == argmax dot (dividing by the row's own norm cannot
     change the argmax). Ties resolve to the lowest centroid id (id-ordered
     rows; np.argmax returns the first max). Measured ~4x faster end-to-end
-    than the pure-expression variant below, whose per-row interpreted
-    zip_with/aggregate dots dominate — dense linear algebra is the case
-    where an Arrow batch beats JVM expressions."""
+    than per-row JVM transform/aggregate dots over a flat centroid literal,
+    whose interpreted evaluation dominates — dense linear algebra is the
+    case where an Arrow batch beats JVM expressions."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import IntegerType
 
@@ -189,35 +189,6 @@ def _nearest_centroid_arrow(vec: Column, centroids: list[tuple[int, list[float]]
     return assign.asNondeterministic()(vec)
 
 
-def _nearest_centroid(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
-    """Argmax-cosine centroid id as a narrow JVM-side projection (no join,
-    no shuffle) per corpus vector. Centroids are L2-normalized in the
-    driver, so argmax cosine == argmax of a single dot product per centroid
-    (dividing by the row's own norm cannot change the argmax) — one dot per
-    centroid instead of two dots + two norms. Ties resolve to the lowest
-    centroid id: centroids are fed in id order and ``array_position``
-    returns the FIRST occurrence of the max."""
-    # All centroids ship as ONE flat array Literal (not one expression node
-    # per float): Catalyst analysis/codegen stays O(1) in centroid count —
-    # with per-float literals, planning a 40×64 codebook cost ~3 s per
-    # fresh plan vs ~0.1 s flat (measured), while execution is identical.
-    dim = len(centroids[0][1])
-    mat = np.asarray([v for _, v in centroids], dtype=np.float64)
-    nrms = np.linalg.norm(mat, axis=1)
-    nrms[nrms == 0.0] = 1.0
-    # numpy literals take the vectorized py4j path; a python list would be
-    # converted element-by-element over the gateway (~40x slower to build)
-    flat_lit = F.lit((mat / nrms[:, None]).ravel())
-    cids_lit = F.lit(np.asarray([cid for cid, _ in centroids], dtype=np.int32))
-    scores = F.transform(
-        F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-        lambda i: dot(vec, F.slice(flat_lit, i * dim + 1, dim)),
-    )
-    return F.element_at(
-        cids_lit, F.array_position(scores, F.array_max(scores)).cast("int")
-    )
-
-
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -227,23 +198,18 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    arrow_assign: bool = True,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors are bucketed by nearest
     centroid (narrow map); each query probes its `n_probe` nearest lists;
     exact cosine reranks the probed candidates. Scale shape: assignment is
     shuffle-free, the probe table is broadcast, and the only shuffle is the
     per-query top-k window — O(corpus/`len(centroids)` × n_probe) scored
-    rows instead of O(corpus × queries).
-
-    ``arrow_assign``: assignment as one gemm per Arrow batch (default;
-    fastest) vs pure JVM expressions (no Python workers in the plan)."""
+    rows instead of O(corpus × queries)."""
     spark = embeddings.sparkSession
     cen = spark.createDataFrame(
         [(cid, v) for cid, v in centroids], "cid int, cv array<double>"
     )
-    assigner = _nearest_centroid_arrow if arrow_assign else _nearest_centroid
-    assigned = embeddings.withColumn("cid", assigner(F.col(vec_col), centroids))
+    assigned = embeddings.withColumn("cid", _nearest_centroid_arrow(F.col(vec_col), centroids))
 
     qc = queries.select(query_id_col, F.col(vec_col).alias("q_vec")).crossJoin(
         F.broadcast(cen)

@@ -83,9 +83,9 @@ def main() -> None:
     out += [
         "## extraction_pipeline",
         "",
-        "*two documents scans (text branch + cached media locators), "
-        "distinct-ref recognition with compute-sized repartition, broadcast "
-        "of recognized results, salted two-phase reassembly*",
+        "*two documents scans (one pass over the spans + the distinct refs), "
+        "distinct-ref recognition with compute-sized repartition, one left "
+        "join of the recognized refs, salted two-phase reassembly*",
         "",
         "```",
         plan.rstrip(),

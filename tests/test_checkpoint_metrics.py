@@ -150,7 +150,7 @@ def test_kernel_runs_once_per_distinct_ref(spark, small_corpus, tmp_path, monkey
 
 def test_checkpointed_run_leaves_no_cached_frames(spark, small_corpus, tmp_path):
     """The per-invocation ref table is released whether the run finishes
-    or its write raises."""
+    or its write raises, and a plain run_extraction caches nothing."""
     docs_pd, media_pd, _ = small_corpus
     write_corpus_parquet(docs_pd, media_pd, str(tmp_path))
     docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
@@ -160,6 +160,9 @@ def test_checkpointed_run_leaves_no_cached_frames(spark, small_corpus, tmp_path)
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
     before = persisted()
+
+    pipeline.run_extraction(spark, docs, media).collect()
+    assert persisted() == before
 
     checkpoint.run_with_checkpoints(
         spark, docs, media, str(tmp_path / "out"), str(tmp_path / "ledger"),

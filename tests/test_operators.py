@@ -1582,14 +1582,16 @@ def test_substring_dedup_apply_matches_oracle_with_null_text(spark):
 
 
 def test_bpe_train_matches_python_twin(spark):
-    """BPE merge training vs an independent plain-Python implementation
-    of Sennrich et al. 2016 (frequency-weighted distinct words, greedy
-    leftmost non-overlapping merge, (count desc, pair asc) tie-break):
-    the full merge sequence must be identical. Also pins the canonical
-    low/lower/newest/widest example's first merges (es, est, est</w>)."""
+    """BPE merge training at batch_size=1 (q108) vs an independent
+    plain-Python implementation of sequential Sennrich et al. 2016 BPE
+    (frequency-weighted distinct words, greedy leftmost non-overlapping
+    merge, (count desc, pair asc) tie-break): the full merge sequence must
+    be identical, i.e. one merge per batch degenerates to exact
+    one-at-a-time BPE. Also pins the canonical low/lower/newest/widest
+    example's first merges (es, est, est</w>)."""
     from collections import Counter
 
-    from ocr_text_recognition_spark.operators.lm import bpe_train
+    from ocr_text_recognition_spark.operators.lm import bpe_train_batched
 
     text = ("low " * 5 + "lower " * 2 + "newest " * 6 + "widest " * 3).strip()
 
@@ -1622,7 +1624,10 @@ def test_bpe_train_matches_python_twin(spark):
         return merges
 
     docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = [tuple(r) for r in bpe_train(docs, "doc_id", "text", n_merges=8).collect()]
+    got = [
+        tuple(r)
+        for r in bpe_train_batched(docs, "doc_id", "text", n_merges=8, batch_size=1).collect()
+    ]
     assert got == python_bpe(text, 8)
     assert [(r[1], r[2]) for r in got[:3]] == [("e", "s"), ("es", "t"), ("est", "</w>")]
 
@@ -1687,20 +1692,3 @@ def test_bpe_train_batched_matches_python_twin(spark):
     ]
     assert got == _python_bpe_batched(text, 16, 4)
     assert len(got) == 16
-
-
-def test_bpe_train_batched_size1_is_sequential(spark):
-    """batch_size=1 degenerates to exact one-at-a-time BPE: the merge
-    table equals bpe_train's on the same corpus."""
-    from ocr_text_recognition_spark.operators.lm import bpe_train, bpe_train_batched
-
-    text = ("low " * 5 + "lower " * 2 + "newest " * 6 + "widest " * 3).strip()
-    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    seq = [tuple(r) for r in bpe_train(docs, "doc_id", "text", n_merges=8).collect()]
-    bat = [
-        tuple(r)
-        for r in bpe_train_batched(
-            docs, "doc_id", "text", n_merges=8, batch_size=1
-        ).collect()
-    ]
-    assert bat == seq

@@ -77,6 +77,38 @@ def test_missing_media_ref_yields_empty_text(spark):
     ]
 
 
+def test_hostile_shapes_match_golden(spark, small_corpus):
+    """Shapes the generator never emits still come out exactly as the
+    golden path has them, next to an ordinary document: nothing is
+    dropped and nothing takes another span's text."""
+    import pandas as pd
+
+    from ocr_text_recognition_spark import corpus
+
+    docs_pd, media_pd, _ = small_corpus
+    hostile = {
+        "zero-span document": [],
+        "unknown span kind": [
+            {"kind": "audio", "text": "<p>a transcript worth keeping here</p>", "media_ref": "clip", "offset": 0},
+            {"kind": "text", "text": "<p>the body text of this document</p>", "media_ref": "", "offset": 1},
+        ],
+        "NULL text": [{"kind": "text", "text": None, "media_ref": "", "offset": 0}],
+        "missing media ref": [
+            {"kind": "media", "text": "", "media_ref": "no-such-image", "offset": 0},
+            {"kind": "pdf", "text": "", "media_ref": "no-such-pdf", "offset": 1},
+        ],
+    }
+    media = pandas_to_spark(spark, media_pd, "media")
+    for name, spans in hostile.items():
+        docs_in = pd.concat(
+            [docs_pd.head(1), pd.DataFrame([{"doc_id": "hostile", "spans": spans}])], ignore_index=True
+        )
+        docs = pandas_to_spark(spark, docs_in, "documents")
+        got = {r["doc_id"]: _as_tuples(r["spans"]) for r in run_extraction(spark, docs, media).collect()}
+        want = {r["doc_id"]: _as_tuples(r["spans"]) for _, r in corpus.make_golden(docs_in, media_pd).iterrows()}
+        assert got == want, name
+
+
 def test_preprocess_kwargs_flow_to_media_udf(spark, small_corpus):
     """run_extraction(preprocess_kwargs={'binarizer': 'adaptive'}) must
     apply the adaptive chain inside the Arrow UDF: per-ref output equals

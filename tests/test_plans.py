@@ -96,22 +96,20 @@ def _plan_nodes(df) -> list[tuple[str, str]]:
 
 
 def test_checkpoint_wave_joins_ref_table_only(spark, small_corpus, tmp_path):
-    """A checkpoint wave (assemble over a persisted ref table) runs the
-    text UDF and nothing of the kernel stage: no ref UDF, no media scan.
-    Its ledger rows are built in the JVM, with no Python RDD behind them."""
+    """A checkpoint wave (assemble over a persisted ref table) is one pass
+    over the spans: exactly one documents scan, no union, and the text UDF
+    as its only Python node, with nothing of the kernel stage (no ref UDF,
+    no media scan). Its ledger rows are built in the JVM, with no Python
+    RDD behind them."""
     from ocr_text_recognition_spark.extraction.checkpoint import ledger_frame
-    from ocr_text_recognition_spark.extraction.pipeline import (
-        assemble,
-        recognize_refs,
-        ref_locators,
-    )
+    from ocr_text_recognition_spark.extraction.pipeline import assemble, recognize_refs
     from ocr_text_recognition_spark.io_pandas import write_corpus_parquet
 
     docs_pd, media_pd, _ = small_corpus
     write_corpus_parquet(docs_pd, media_pd, str(tmp_path))
     docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
     media = spark.read.parquet(str(tmp_path / "media.parquet"))
-    ref_text = recognize_refs(spark, ref_locators(docs), media).persist()
+    ref_text = recognize_refs(spark, docs, media).persist()
     try:
         ref_text.count()
         nodes = _plan_nodes(assemble(docs, ref_text))
@@ -122,8 +120,9 @@ def test_checkpoint_wave_joins_ref_table_only(spark, small_corpus, tmp_path):
     assert "extract_main_text_udf" in python[0]
     assert not any("extract_ref_udf" in desc for _, desc in nodes)
     assert "InMemoryTableScan" in [name for name, _ in nodes]
+    assert "Union" not in [name for name, _ in nodes]
     scans = [desc for name, desc in nodes if name.startswith("Scan")]
-    assert scans and all("ReadSchema: struct<doc_id:string,spans:" in d for d in scans), scans
+    assert len(scans) == 1 and "ReadSchema: struct<doc_id:string,spans:" in scans[0], scans
 
     ledger = ledger_frame(spark, [0, 5], "run", 0.5)
     assert ledger.schema.simpleString() == (
