@@ -20,6 +20,15 @@ invocation (unpersisted on exit, error or not), so it adds no state to
 resume from: a crash loses recomputable cache, never a committed bucket,
 and the output and ledger are written exactly as without it.
 
+Waves are double-buffered: at most ``WAVES_IN_FLIGHT`` (two) waves compute
+and write at once, so wave k+1's planning, scan and shuffles fill the cores
+while wave k commits. The ledger appends stay on the calling thread, in wave
+order, each after its own wave's output commit: concurrent appends to one
+ledger path would share FileOutputCommitter's ``_temporary/0``, which the
+first commit deletes. The output writes may overlap because a dynamic
+partition overwrite stages each job under its own ``.spark-staging-<uuid>``
+and the waves' bucket sets are disjoint.
+
 The job's per-bucket counts (``metrics.bucket_metrics``) are keyed by the
 same ``(run_id, bucket)`` as the ledger rows, so the two join 1:1.
 
@@ -33,7 +42,10 @@ from __future__ import annotations
 
 import time
 import uuid
+from collections import deque
+from concurrent.futures import Future
 
+from pyspark import InheritableThread
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +56,10 @@ from ocr_text_recognition_spark.extraction.pipeline import assemble, recognize_r
 DEFAULT_N_BUCKETS = 256
 DEFAULT_BUCKETS_PER_WAVE = 8
 LEDGER_SCHEMA = "bucket int, run_id string, completed_at double, wave_s double"
+# Waves computing or writing at once. Two overlap one wave's commit with the
+# next one's work; after a crash, at most this many waves are committed but
+# not ledgered (and are redone on resume).
+WAVES_IN_FLIGHT = 2
 
 
 def bucket_of(doc_id_col, n_buckets: int):
@@ -81,6 +97,28 @@ def ledger_frame(spark: SparkSession, wave: list[int], run_id: str, wave_s: floa
     )
 
 
+def write_wave(
+    docs_b: DataFrame, ref_text: DataFrame, wave: list[int], n_buckets: int, out_dir: str
+) -> float:
+    """Assemble the documents of ``wave``'s buckets against ``ref_text`` and
+    overwrite those buckets' output directories; returns the wave's wall
+    time in seconds."""
+    t0 = time.perf_counter()
+    wave_docs = docs_b.filter(F.col("bucket").isin(wave)).drop("bucket")
+    result = assemble(wave_docs, ref_text).withColumn(
+        "bucket", bucket_of(F.col("doc_id"), n_buckets)
+    )
+    # Whole-directory overwrite per bucket == idempotent re-run.
+    (
+        result.repartition("bucket")
+        .write.partitionBy("bucket")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(out_dir)
+    )
+    return time.perf_counter() - t0
+
+
 def run_with_checkpoints(
     spark: SparkSession,
     docs: DataFrame,
@@ -97,18 +135,31 @@ def run_with_checkpoints(
 
     ``max_waves`` exists for kill/resume tests (process only the first K
     waves, then 'crash'); it also bounds the ref table, which covers only
-    the planned buckets. Returns the buckets processed this invocation.
+    the planned buckets. Returns the buckets processed this invocation, in
+    wave order.
 
-    Concurrency contract: the ledger append is a separate write AFTER the
-    bucket output commit, so a crash between them is safe (the bucket is
-    simply reprocessed; dynamic partition overwrite makes the redo
-    idempotent). TWO resumed drivers running concurrently can both pick
-    an unledgered bucket and double-process it — also safe (idempotent
+    Concurrency contract: up to ``WAVES_IN_FLIGHT`` waves run at once, each
+    on its own thread that inherits the caller's local properties, so a job
+    group set by the caller covers (and can cancel) every wave's jobs. The
+    calling thread waits for the waves in order and appends each wave's
+    ledger rows strictly AFTER that wave's output commit, and only then
+    starts the wave after next; the appends never overlap one another, since
+    two appends to one path share a committer ``_temporary`` directory. A
+    crash between a commit and its append is safe (the bucket is simply
+    reprocessed; dynamic partition overwrite makes the redo idempotent). On
+    the first wave error no further wave starts, the other in-flight wave is
+    waited for (its buckets may commit unledgered, the same case), and the
+    error is re-raised. TWO resumed drivers running concurrently can both
+    pick an unledgered bucket and double-process it — also safe (idempotent
     output, duplicate ledger rows deduped by ``completed_buckets``'s
     distinct) but wasteful; deployments that need single-writer semantics
     should fence on ``run_id`` (e.g. a ledger precondition or a lock
     service) before starting a wave.
     """
+    if n_buckets < 1 or buckets_per_wave < 1:
+        raise ValueError(
+            f"n_buckets and buckets_per_wave must be >= 1, got {n_buckets} and {buckets_per_wave}"
+        )
     run_id = run_id or uuid.uuid4().hex[:12]
     done = completed_buckets(spark, ledger_dir)
     todo = [b for b in range(n_buckets) if b not in done]
@@ -122,27 +173,37 @@ def run_with_checkpoints(
     planned = docs_b.filter(F.col("bucket").isin([b for w in waves for b in w])).drop("bucket")
     ref_text = recognize_refs(spark, planned, media, preprocess_kwargs).persist()
     processed: list[int] = []
+    pending: deque = deque()  # (wave, thread, future), in wave order
+
+    def start(wave: list[int]) -> tuple[list[int], InheritableThread, Future]:
+        future: Future = Future()
+
+        def body() -> None:
+            try:
+                future.set_result(write_wave(docs_b, ref_text, wave, n_buckets, out_dir))
+            except BaseException as e:
+                future.set_exception(e)
+
+        # started from the caller's thread, so the wave inherits its local properties
+        thread = InheritableThread(body, session=spark, name="checkpoint-wave")
+        thread.start()
+        return wave, thread, future
+
     try:
         ref_text.count()  # materialize: the kernel runs here, before any wave
-        for wave in waves:
-            t0 = time.perf_counter()
-            wave_docs = docs_b.filter(F.col("bucket").isin(wave)).drop("bucket")
-            result = assemble(wave_docs, ref_text).withColumn(
-                "bucket", bucket_of(F.col("doc_id"), n_buckets)
-            )
-            # Whole-directory overwrite per bucket == idempotent re-run.
-            (
-                result.repartition("bucket")
-                .write.partitionBy("bucket")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(out_dir)
-            )
+        upcoming = deque(waves)
+        while upcoming or pending:
+            while upcoming and len(pending) < WAVES_IN_FLIGHT:
+                pending.append(start(upcoming.popleft()))
+            wave, thread, future = pending.popleft()
+            thread.join()
+            wave_s = future.result()
             # Ledger append happens strictly after the output commit.
-            wave_s = time.perf_counter() - t0
             ledger_frame(spark, wave, run_id, wave_s).write.mode("append").parquet(ledger_dir)
             processed.extend(wave)
     finally:
+        for _, thread, _ in pending:  # an in-flight wave still reads ref_text
+            thread.join()
         ref_text.unpersist()
     return processed
 

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import itertools
+import os
+import threading
 from collections.abc import Iterator
 
 import pandas as pd
@@ -179,6 +182,138 @@ def test_checkpointed_run_leaves_no_cached_frames(spark, small_corpus, tmp_path)
         )
     assert not (tmp_path / "ledger2").exists()  # it failed at the first output write
     assert persisted() == before
+
+
+def _leftovers(*dirs) -> list[str]:
+    """Committer staging entries left anywhere under ``dirs``."""
+    return [
+        os.path.join(root, n)
+        for d in dirs
+        for root, subdirs, files in os.walk(d)
+        for n in subdirs + files
+        if n.startswith((".spark-staging-", "_temporary"))
+    ]
+
+
+def _wave_threads() -> list[threading.Thread]:
+    return [t for t in threading.enumerate() if t.name.startswith("checkpoint-wave")]
+
+
+def test_overlapping_waves_commit_before_ledger(spark, small_corpus, tmp_path):
+    """Four waves, two in flight: the output is the golden, each bucket is
+    ledgered once, the ledger stamps follow wave order, no committer
+    staging is left behind and every wave thread has exited."""
+    docs_pd, media_pd, golden_pd = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    out, ledger = str(tmp_path / "out"), str(tmp_path / "ledger")
+    threads = threading.active_count()
+
+    done = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=2
+    )
+    assert done == list(range(8))
+    assert _as_dict(checkpoint.read_output(spark, out).collect()) == _as_dict(
+        r for _, r in golden_pd.iterrows()
+    )
+    rows = spark.read.schema(checkpoint.LEDGER_SCHEMA).parquet(ledger).collect()
+    assert sorted(r["bucket"] for r in rows) == list(range(8))
+    stamps = {r["bucket"]: r["completed_at"] for r in rows}
+    wave_stamps = [{stamps[b] for b in done[i : i + 2]} for i in range(0, 8, 2)]
+    assert all(len(s) == 1 for s in wave_stamps)  # one append per wave
+    order = [s.pop() for s in wave_stamps]
+    assert order == sorted(order) and len(set(order)) == 4
+    assert _leftovers(out, ledger) == []
+    assert threading.active_count() == threads and _wave_threads() == []
+
+
+def test_failing_wave_propagates_and_resumes(spark, small_corpus, tmp_path, monkeypatch):
+    """A wave that raises: the caller gets the error, every ledgered bucket
+    has committed output, the ref table is released and no wave thread is
+    left; a clean resume then reaches the golden with each bucket ledgered
+    exactly once."""
+    docs_pd, media_pd, golden_pd = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    out, ledger = str(tmp_path / "out"), str(tmp_path / "ledger")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    threads = threading.active_count()
+
+    calls = itertools.count(1)
+    real_assemble = checkpoint.assemble
+
+    def third_call_fails(*args, **kwargs):
+        if next(calls) == 3:
+            raise RuntimeError("wave failed")
+        return real_assemble(*args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "assemble", third_call_fails)
+    with pytest.raises(RuntimeError, match="wave failed"):
+        checkpoint.run_with_checkpoints(
+            spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=2, run_id="failed"
+        )
+    ledgered = checkpoint.completed_buckets(spark, ledger)
+    # whole waves, in order, stopping before the failed one
+    assert sorted(ledgered) == list(range(len(ledgered))) and len(ledgered) in (2, 4)
+    has_docs = {b for b, c in _golden_bucket_counts(spark, golden_pd, 8).items() if c[0]}
+    assert all((tmp_path / "out" / f"bucket={b}").is_dir() for b in ledgered & has_docs)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert threading.active_count() == threads and _wave_threads() == []
+
+    monkeypatch.setattr(checkpoint, "assemble", real_assemble)
+    rest = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=2, run_id="resume"
+    )
+    assert sorted(ledgered) + rest == list(range(8))
+    rows = spark.read.schema(checkpoint.LEDGER_SCHEMA).parquet(ledger).collect()
+    assert sorted(r["bucket"] for r in rows) == list(range(8))
+    assert _as_dict(checkpoint.read_output(spark, out).collect()) == _as_dict(
+        r for _, r in golden_pd.iterrows()
+    )
+
+
+def test_caller_job_group_covers_every_wave(spark, small_corpus, tmp_path):
+    """Every job of a checkpointed run, the waves' writes on their worker
+    threads included, runs under the job group the caller set (so the
+    caller can cancel them); a thread that dropped the caller's local
+    properties would launch its jobs outside any group."""
+    docs_pd, media_pd, _ = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+
+    sc.setJobGroup("extract", "checkpointed extraction")
+    try:
+        done = checkpoint.run_with_checkpoints(
+            spark, docs, media, str(tmp_path / "out"), str(tmp_path / "ledger"),
+            n_buckets=8, buckets_per_wave=2,
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert done == list(range(8))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the status store
+    grouped = tracker.getJobIdsForGroup("extract")
+    # per wave at least its output write and its ledger append
+    assert len(grouped) >= 2 * 4
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_wave_arguments_are_validated(spark, small_corpus, tmp_path):
+    """Bucket counts below 1 raise a named ValueError before the ledger is
+    read (here a plain file that no parquet read would accept)."""
+    docs_pd, media_pd, _ = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    ledger = tmp_path / "ledger"
+    ledger.write_text("not a ledger")
+    for kw in ({"n_buckets": 0}, {"buckets_per_wave": 0}, {"n_buckets": -1}):
+        with pytest.raises(ValueError, match="must be >= 1"):
+            checkpoint.run_with_checkpoints(
+                spark, docs, media, str(tmp_path / "out"), str(ledger), **kw
+            )
+    assert not (tmp_path / "out").exists()
 
 
 def test_cer_zero_on_exact_match(spark, small_corpus):
