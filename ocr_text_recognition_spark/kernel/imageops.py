@@ -89,9 +89,9 @@ def gaussian_blur(img: np.ndarray, ksize: int = 5, sigma: float = 1.0) -> np.nda
     return np.clip(out, 0, 255).astype(np.uint8)
 
 
-def otsu_threshold(img: np.ndarray) -> int:
-    """Otsu's between-class-variance-maximizing threshold (histogram method)."""
-    hist = np.bincount(img.ravel(), minlength=256).astype(np.float64)
+def _otsu_threshold_hist(hist: np.ndarray) -> int:
+    """Otsu's threshold from a gray-level histogram."""
+    hist = hist.astype(np.float64)
     total = hist.sum()
     if total == 0:
         return 127
@@ -102,6 +102,11 @@ def otsu_threshold(img: np.ndarray) -> int:
     with np.errstate(divide="ignore", invalid="ignore"):
         sigma_b = np.where(denom > 0, (mu_t * omega - mu) ** 2 / denom, 0.0)
     return int(np.argmax(sigma_b))
+
+
+def otsu_threshold(img: np.ndarray) -> int:
+    """Otsu's between-class-variance-maximizing threshold (histogram method)."""
+    return _otsu_threshold_hist(np.bincount(img.ravel(), minlength=256))
 
 
 # Minimum gray-level separation between Otsu's two classes for the image to
@@ -116,15 +121,22 @@ def otsu_binarize(img: np.ndarray) -> np.ndarray:
     """Grayscale -> ink mask (1 = darker-than-threshold = ink).
 
     Returns an all-zero mask when the dark/light class means are closer
-    than MIN_CLASS_SEPARATION (blank or noise-only image)."""
-    t = otsu_threshold(img)
-    dark = img[img <= t]
-    light = img[img > t]
-    if dark.size == 0 or light.size == 0:
+    than MIN_CLASS_SEPARATION (blank or noise-only image). Both means come
+    from the one histogram the threshold uses: integer level sums divided
+    by integer counts, the same correctly rounded quotient a float64 mean
+    over the class's pixels gives, without two boolean-index passes."""
+    hist = np.bincount(img.ravel(), minlength=256)
+    t = _otsu_threshold_hist(hist)
+    n_dark = int(hist[: t + 1].sum())
+    n_light = int(hist[t + 1 :].sum())
+    if n_dark == 0 or n_light == 0:
         return np.zeros_like(img, dtype=np.uint8)
-    if float(light.mean()) - float(dark.mean()) < MIN_CLASS_SEPARATION:
+    level_sum = hist * np.arange(256, dtype=np.int64)
+    dark_mean = int(level_sum[: t + 1].sum()) / n_dark
+    light_mean = int(level_sum[t + 1 :].sum()) / n_light
+    if light_mean - dark_mean < MIN_CLASS_SEPARATION:
         return np.zeros_like(img, dtype=np.uint8)
-    return (img <= t).astype(np.uint8)
+    return (img <= t).view(np.uint8)
 
 
 def adaptive_binarize(img: np.ndarray, block: int = 11, c: float = 2.0) -> np.ndarray:
@@ -227,6 +239,20 @@ def morph_close(mask: np.ndarray, kh: int, kw: int) -> np.ndarray:
     return erode(dilate(mask, kh, kw), kh, kw)
 
 
+def _antidiagonal_sums(a: np.ndarray) -> np.ndarray:
+    """c[j] = sum over k of a[k, j - k], for a 2-D array: each row laid
+    into a zero row one element wider than the next, so a flat reshape
+    shifts row k right by k and a column sum adds the diagonals. Works on
+    the transpose when there are more rows than columns (the sums are the
+    same), so the buffer stays within twice the array's size."""
+    if a.shape[0] > a.shape[1]:
+        a = a.T
+    n, w = a.shape
+    z = np.zeros((n, w + n), dtype=a.dtype)
+    z[:, :w] = a
+    return z.ravel()[: n * (w + n - 1)].reshape(n, w + n - 1).sum(axis=0)
+
+
 def estimate_shear_slope_milli(mask: np.ndarray) -> int:
     """Estimate the horizontal shear applied to an ink mask.
 
@@ -237,27 +263,29 @@ def estimate_shear_slope_milli(mask: np.ndarray) -> int:
     a |slope| below ~0.5 px/k-rows is treated as straight, like the
     reference's 0.5-degree dead-band.
     """
-    ys, xs = np.nonzero(mask)
-    if len(ys) == 0:
+    h, w = mask.shape
+    # The un-shear shift round(y * slope) depends only on the row and, for
+    # |slope| < 1, steps by at most one between rows, so the rows of one
+    # slope fall into bands of equal shift whose band k is shifted k
+    # columns from band 0. A band's column profile is the difference of
+    # two rows of ONE row prefix sum, and the un-sheared projection is the
+    # sum of the band profiles along the diagonals — O(bands x width) per
+    # slope instead of re-binning every ink pixel, and O(pixels) memory
+    # for any slope. Bit-identical to binning the pixels: the same
+    # float64 round() decides each row's shift, and the counts and the
+    # sum of squares are exact integers.
+    prefix = np.zeros((h + 1, w), dtype=np.int32)
+    np.cumsum(mask, axis=0, dtype=np.int32, out=prefix[1:])
+    if not prefix[h].any():
         return 0
-    # The un-shear shift round(y * slope) depends only on the ROW, so it is
-    # computed once per row (h values) and gathered, instead of a per-ink-
-    # pixel float64 multiply+round; int32 throughout halves the bytes per
-    # pass. ~21 _score calls per image make this the kernel's biggest
-    # memory-traffic source, which is what limits packed-worker scaling.
-    # Bit-identical to the per-pixel form: round() sees the same float64
-    # value either way, and the integer sum of squares is exact (< 2^53),
-    # so float64 accumulation matched it exactly too.
-    xs32 = xs.astype(np.int32)
-    ys32 = ys.astype(np.int32)
-    rows = np.arange(mask.shape[0], dtype=np.float64)
-    xp = np.empty(len(xs32), dtype=np.int32)
+    rows = np.arange(h, dtype=np.float64)
 
     def _score(sm: int) -> float:
-        shift = np.round(rows * (sm / 1000.0)).astype(np.int32)
-        np.subtract(xs32, shift[ys32], out=xp)
-        np.subtract(xp, xp.min(), out=xp)
-        counts = np.bincount(xp)
+        shift = np.round(rows * (sm / 1000.0))
+        bounds = np.concatenate(([0], np.flatnonzero(shift[1:] != shift[:-1]) + 1, [h]))
+        edges = prefix[bounds]
+        bands = edges[1:] - edges[:-1]
+        counts = _antidiagonal_sums(bands[::-1] if sm > 0 else bands)
         return float(np.dot(counts, counts))
 
     # Two-stage search: coarse step-15 sweep, then step-5 refinement ±10

@@ -30,7 +30,8 @@ def encode_image(img: np.ndarray) -> bytes:
 
 
 def decode_image(data: bytes) -> np.ndarray:
-    """Bytes -> grayscale uint8 HxW ndarray. Raises ValueError on corrupt input.
+    """Bytes -> grayscale uint8 HxW ndarray. Raises ValueError on corrupt
+    input, including a header with a zero height or width.
 
     Inflates at most h*w + 1 bytes, so a payload whose stream expands past
     its header's size (a decompression bomb) costs no more memory than the
@@ -38,6 +39,10 @@ def decode_image(data: bytes) -> np.ndarray:
     if len(data) < 12 or data[:4] != _MAGIC:
         raise ValueError("not an IMG1 payload")
     h, w = struct.unpack("<II", data[4:12])
+    if h == 0 or w == 0:
+        # no pixel to recognize, and the blur's edge padding cannot pad an
+        # empty axis: a corrupt payload like any other
+        raise ValueError(f"corrupt IMG1 payload: zero-pixel image {h}x{w}")
     if h * w > MAX_PIXELS:
         raise ValueError(f"IMG1 payload too large: {h}x{w} exceeds {MAX_PIXELS} pixels")
     d = zlib.decompressobj()

@@ -54,21 +54,34 @@ def _max_run_per_col(block: np.ndarray) -> np.ndarray:
     return best
 
 
+def _rule_lines(block: np.ndarray, ink: np.ndarray, extent: int) -> np.ndarray:
+    """Indices of the columns of ``block`` whose longest ink run covers
+    >= RULE_COVERAGE of ``extent``. A run never exceeds its column's ink
+    count ``ink`` and both are divided by the same extent, so a column
+    whose count misses the bar cannot hold a rule and is never scanned."""
+    cand = np.flatnonzero(ink / extent >= RULE_COVERAGE)
+    run = _max_run_per_col(block[:, cand])
+    return cand[run / extent >= RULE_COVERAGE]
+
+
 def detect_rules(mask: np.ndarray) -> tuple[list[int], list[int]]:
     """Ink mask -> (horizontal rule y-centers, vertical rule x-centers).
 
     Measured against the grid's own extent so margins don't dilute coverage.
-    """
-    ys, xs = np.nonzero(mask)
+    Per-row and per-column ink counts give the extent and the candidate
+    lines; only candidates pay the contiguous-run scan (most images have
+    no grid and no candidate)."""
+    row_ink = np.count_nonzero(mask, axis=1)
+    col_ink = np.count_nonzero(mask, axis=0)
+    ys = np.flatnonzero(row_ink)
     if len(ys) == 0:
         return [], []
-    x0, x1 = int(xs.min()), int(xs.max()) + 1
-    y0, y1 = int(ys.min()), int(ys.max()) + 1
-    row_run = _max_run_per_col(mask[:, x0:x1].T) / max(x1 - x0, 1)
-    col_run = _max_run_per_col(mask[y0:y1, :]) / max(y1 - y0, 1)
-    h_rules = segment.merge_1d(np.nonzero(row_run >= RULE_COVERAGE)[0], RULE_MERGE_GAP)
-    v_rules = segment.merge_1d(np.nonzero(col_run >= RULE_COVERAGE)[0], RULE_MERGE_GAP)
-    return h_rules, v_rules
+    xs = np.flatnonzero(col_ink)
+    x0, x1 = int(xs[0]), int(xs[-1]) + 1
+    y0, y1 = int(ys[0]), int(ys[-1]) + 1
+    h_rules = _rule_lines(mask[:, x0:x1].T, row_ink, max(x1 - x0, 1))
+    v_rules = _rule_lines(mask[y0:y1, :], col_ink, max(y1 - y0, 1))
+    return segment.merge_1d(h_rules, RULE_MERGE_GAP), segment.merge_1d(v_rules, RULE_MERGE_GAP)
 
 
 def segment_cells(h_rules: list[int], v_rules: list[int]) -> list[dict]:

@@ -10,7 +10,8 @@ from that affinity and checks every pass against the golden spans. Round r
 runs seed r at both levels, alternating which goes first; the gate is the
 median per-round (docs/s at 4 / docs/s at 1) / 4 against 0.8. The raw numpy
 kernel in 1 and 4 barrier-synchronised processes (median of 3; no Spark, no
-UDF boundary) is co-measured as the hardware ceiling. Writes
+UDF boundary) is co-measured as the hardware ceiling, its 1-process
+repeats spread over the second to fourth CPUs. Writes
 BENCH/scaling.json and BENCH/BASELINE.md rendered from it; on fewer than 4
 CPUs or any incorrect or failed run it writes nothing and exits non-zero.
 """
@@ -67,11 +68,15 @@ def _worker(payloads: list[bytes], cpu: int, barrier, out) -> None:
 
 
 def ceiling(cpus: list[int], payloads: list[bytes], k: int) -> dict:
-    """Aggregate img/s of k independent kernel processes, median of repeats."""
+    """Aggregate img/s of k independent kernel processes, median of repeats.
+    Repeat i pins to the k CPUs starting at cpus[(i + 1) % (len(cpus) - k + 1)],
+    so the three 1-process repeats run on cpus[1..3] rather than all on
+    CPU 0."""
     aggs = []
-    for _ in range(KERNEL_REPEATS):
+    for i in range(KERNEL_REPEATS):
+        first = (i + 1) % (len(cpus) - k + 1)
         q, barrier = mp.Queue(), mp.Barrier(k)
-        procs = [mp.Process(target=_worker, args=(payloads, c, barrier, q)) for c in cpus[:k]]
+        procs = [mp.Process(target=_worker, args=(payloads, c, barrier, q)) for c in cpus[first : first + k]]
         for p in procs:
             p.start()
         aggs.append(round(sum(q.get() for _ in procs), 1))

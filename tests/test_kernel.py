@@ -57,7 +57,8 @@ class TestCodec:
         bomb = b"IMG1" + struct.pack("<II", 10, 10) + stream
         over_cap = b"IMG1" + struct.pack("<II", 100_000, 100_000) + zlib.compress(b"\0")
         bad_stream = b"IMG1" + struct.pack("<II", 2, 2) + b"not zlib"
-        for data in (b"not an image at all", bomb, over_cap, bad_stream):
+        zero_pixel = [b"IMG1" + struct.pack("<II", h, w) + zlib.compress(b"") for h, w in ((0, 5), (5, 0), (0, 0))]
+        for data in (b"not an image at all", bomb, over_cap, bad_stream, *zero_pixel):
             tracemalloc.start()
             try:
                 with pytest.raises(ValueError):
@@ -283,7 +284,7 @@ class TestKernelRobustness:
             assert got == "1", f"slope {slope}: {got!r}"
 
     def test_connected_components_matches_bfs(self):
-        # vectorized run-labeling + min-label propagation == classic BFS
+        # vectorized run-labeling + root hooking == classic BFS
         # flood fill (8-connectivity), up to label bijection
         from collections import deque
 
@@ -430,3 +431,24 @@ def test_classify_glyph_large_dimensions_no_crash():
     assert isinstance(ch2, str) and 0.0 <= conf2 <= 1.0
     # cached second call returns the identical result
     assert recognize.classify_glyph(wide) == (ch, conf)
+
+
+# sha256 of "\x00".join(recognize_media_bytes(p)) over the distinct media
+# refs of make_corpus(2000, seed=1), sorted by media_ref (1,563 images: the
+# extract_mixed benchmark's images). Derived from the per-pixel forms of the
+# speck filter, rule detection, Otsu means and shear search, which the
+# kernel replaced with exact shortcuts; any drift in any stage moves it.
+BENCHMARK_IMAGES_DIGEST = "b60817096d09bc2101ab4a67c7fbaad768f3fa3c348240b6faf3032226b54ca7"
+
+
+def test_benchmark_images_digest():
+    import hashlib
+
+    from ocr_text_recognition_spark import corpus
+
+    docs, media = corpus.make_corpus(2000, seed=1)
+    used = sorted({s["media_ref"] for spans in docs["spans"] for s in spans if s["kind"] == "media"})
+    payloads = dict(zip(media["media_ref"], media["content"]))
+    assert len(used) == 1563
+    texts = [reference_kernel.recognize_media_bytes(payloads[ref]) for ref in used]
+    assert hashlib.sha256("\x00".join(texts).encode()).hexdigest() == BENCHMARK_IMAGES_DIGEST

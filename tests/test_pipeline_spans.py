@@ -81,11 +81,18 @@ def test_hostile_shapes_match_golden(spark, small_corpus):
     """Shapes the generator never emits still come out exactly as the
     golden path has them, next to an ordinary document: nothing is
     dropped and nothing takes another span's text."""
+    import struct
+    import zlib
+
     import pandas as pd
 
     from ocr_text_recognition_spark import corpus
 
     docs_pd, media_pd, _ = small_corpus
+    zero_pixel = b"IMG1" + struct.pack("<II", 0, 5) + zlib.compress(b"")
+    media_pd = pd.concat(
+        [media_pd, pd.DataFrame([{"media_ref": "zero-pixel", "content": zero_pixel}])], ignore_index=True
+    )
     hostile = {
         "zero-span document": [],
         "unknown span kind": [
@@ -97,6 +104,7 @@ def test_hostile_shapes_match_golden(spark, small_corpus):
             {"kind": "media", "text": "", "media_ref": "no-such-image", "offset": 0},
             {"kind": "pdf", "text": "", "media_ref": "no-such-pdf", "offset": 1},
         ],
+        "zero-pixel image": [{"kind": "media", "text": "", "media_ref": "zero-pixel", "offset": 0}],
     }
     media = pandas_to_spark(spark, media_pd, "media")
     for name, spans in hostile.items():
