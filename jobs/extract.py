@@ -77,6 +77,7 @@ def main() -> None:
     from ocr_text_recognition_spark.extraction.metrics import bucket_metrics
     from ocr_text_recognition_spark.extraction.pipeline import extraction_session_conf
     from ocr_text_recognition_spark.session import default_cores, get_spark
+    from ocr_text_recognition_spark.sources import read_table, write_table
 
     # Scan/shuffle sizing for a compute-bound job: target >= 4 splits per
     # slot, clamped back to Spark's stock values at multi-GB inputs (the
@@ -98,8 +99,8 @@ def main() -> None:
     if nbytes:
         extra_conf = extraction_session_conf(nbytes, default_cores())
     spark = get_spark("extract_job", extra_conf=extra_conf)
-    docs = spark.read.parquet(args.docs)
-    media = spark.read.parquet(args.media)
+    docs = read_table(spark, args.docs)
+    media = read_table(spark, args.media)
     processed = run_with_checkpoints(
         spark,
         docs,
@@ -113,7 +114,7 @@ def main() -> None:
     )
     print(f"processed buckets: {processed}")
     if args.metrics and processed:
-        bucket_metrics(spark, args.out, processed, run_id).write.mode("append").parquet(args.metrics)
+        write_table(bucket_metrics(spark, args.out, processed, run_id), args.metrics, mode="append")
 
 
 if __name__ == "__main__":

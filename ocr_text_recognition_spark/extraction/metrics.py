@@ -1,7 +1,7 @@
 """Per-bucket lineage + extraction metrics (north star, BASELINE.json:6):
 docs, spans, chars decoded and media spans of each bucket a run committed,
-keyed by ``(run_id, bucket)`` like the checkpoint ledger rows they join;
-CER vs reference. Everything here stays in the JVM.
+keyed by ``(run_id, bucket)`` like the checkpoint ledger rows they join.
+Everything here stays in the JVM.
 """
 
 from __future__ import annotations
@@ -34,27 +34,3 @@ def bucket_metrics(spark: SparkSession, out_dir: str, buckets: list[int], run_id
         *[F.coalesce(c, F.lit(0)).alias(c) for c in ("docs", "spans", "chars_decoded", "media_spans")],
     )
 
-
-def cer_vs_reference(extracted: DataFrame, golden: DataFrame) -> DataFrame:
-    """Join extracted output to golden fixtures on doc_id; emit per-doc CER
-    over the concatenated span texts. Built-in ``levenshtein`` stays
-    JVM-side."""
-    def flat(df: DataFrame, out: str) -> DataFrame:
-        return df.select(
-            "doc_id",
-            F.concat_ws(
-                "␞", F.transform("spans", lambda s: s["text"])
-            ).alias(out),
-        )
-
-    a = flat(extracted, "got")
-    b = flat(golden, "want")
-    joined = a.join(b, "doc_id")  # golden is dimension-sized in tests; at
-    # scale it's a broadcast join (fixture suites are small by definition)
-    return joined.select(
-        "doc_id",
-        (
-            F.levenshtein("got", "want")
-            / F.greatest(F.length("want"), F.lit(1))
-        ).alias("cer"),
-    )

@@ -20,12 +20,10 @@ assemble; the checkpointed job (checkpoint.py) calls the two apart: the
 ref table once per invocation, assemble once per wave.
 
 Scale notes (the design target is 10^12 docs / 100 TB):
-- The media join shuffles on media_ref; at scale both sides are bucketed
-  on media_ref so the join is co-located (sources.write_bucketed /
-  read_bucketed; the zero-Exchange plan is pinned in
-  tests/test_plans.py::test_bucketed_join_no_shuffle). The distinct()
-  before the join collapses popular refs BEFORE the expensive kernel
-  runs — the kernel cost is O(distinct images), not O(media spans).
+- The media join is a distinct() over the (kind, media_ref) refs, then a
+  join to the payloads on media_ref. The distinct collapses popular refs
+  BEFORE the expensive kernel runs — the kernel cost is O(distinct
+  images), not O(media spans).
 - Reassembly is the one unavoidable shuffle on doc_id. A media-heavy doc
   (the skew knob, BASELINE.json:6) would bottleneck a single reducer, so
   phase 1 collects partial span lists per (doc_id, salt) and phase 2

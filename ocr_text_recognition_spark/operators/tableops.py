@@ -105,14 +105,6 @@ def pad_rows(rows: DataFrame, doc_col: str = "doc_id", cells_col: str = "cells")
     )
 
 
-def synthetic_col_names(n: int | None = None):
-    """Column_1..N name array expression (for headerless tables)."""
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(n) if n else F.col("max_cols")),
-        lambda i: F.concat(F.lit("Column_"), i.cast("string")),
-    )
-
-
 def assemble_wide_table(cells: DataFrame, doc_col: str = "doc_id") -> DataFrame:
     """The reference's full tabularization step in one operator
     (_create_dataframe_from_table_data + _is_header_row,

@@ -41,34 +41,6 @@ def token_count_bpe(text: Column) -> Column:
     return F.regexp_count(text, F.lit(BPE_TOKEN_PATTERN))
 
 
-def _stopword_hits(text: Column, words: list[str]) -> Column:
-    toks = tokens(text)
-    wordset = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(toks, lambda t: F.array_contains(wordset, t)))
-
-
-def lang_scores(text: Column) -> Column:
-    """Struct of per-language stopword-hit counts, accumulated in ONE pass
-    over a single tokens array (one lower+split per row; each token does
-    |languages| set-membership tests inside the same fold) instead of one
-    split + filter pass per language."""
-    langs = list(LANG_STOPWORDS)
-    zero = F.struct(*[F.lit(0).alias(lang) for lang in langs])
-    wordsets = {
-        lang: F.array(*[F.lit(w) for w in ws]) for lang, ws in LANG_STOPWORDS.items()
-    }
-
-    def step(acc, tok):
-        return F.struct(
-            *[
-                (acc[lang] + F.array_contains(wordsets[lang], tok).cast("int")).alias(lang)
-                for lang in langs
-            ]
-        )
-
-    return F.aggregate(tokens(text), zero, step)
-
-
 def lang_id(text: Column) -> Column:
     """argmax language, with a CJK-codepoint check first (zh has no
     whitespace stopwords) and 'und' when no evidence at all. The argmax

@@ -56,14 +56,6 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # Spark 4.1's checksummed checkpoint writer (ChecksumCheckpoint-
-        # FileManager) can deadlock a state-store delta commit: the task
-        # blocks forever in createWithChecksum -> awaitResult on the
-        # background checksum future (observed wedging applyInPandasWith-
-        # State commits on local disk). The checksum is an integrity belt
-        # for remote object-store checkpoints; disable it by default and
-        # let deployments that want it re-enable via extra_conf.
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     )
     # Only force a master when none is configured (spark-submit wins).
     if not os.environ.get("SPARK_MASTER") and "SPARK_SUBMIT" not in os.environ:

@@ -18,91 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-VALID_IMAGE_EXTENSIONS = ("png", "jpg", "jpeg", "bmp", "tiff", "img1")
-
-
-def read_media_dir(
-    spark: SparkSession,
-    path: str,
-    extensions: tuple[str, ...] = VALID_IMAGE_EXTENSIONS,
-) -> DataFrame:
-    """Directory of image files -> (media_ref, content) via the binaryFile
-    source — the distributed analog of the reference's image file scan +
-    extension-validation filter (/root/reference/src/model/ocr_model.py:33-53,
-    /root/reference/src/services/file_service.py:103-114). media_ref = file
-    name stem; existence is implicit in the scan."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.format("binaryFile").option("pathGlobFilter", "*.*").load(path)
-    ext = F.lower(F.regexp_extract(F.col("path"), r"\.([^./\\]+)$", 1))
-    return (
-        df.filter(ext.isin(*extensions))
-        .select(
-            F.regexp_extract(F.col("path"), r"([^/\\]+)\.[^./\\]+$", 1).alias("media_ref"),
-            F.col("content"),
-        )
-    )
-
-
-def dump_debug_images(media: DataFrame, out_dir: str, sample_fraction: float = 0.01) -> int:
-    """Diagnostic image sink (reference demo writes intermediate PNGs,
-    /root/reference/demo_enhanced_table_ocr.py:70-108): collect a SAMPLED
-    subset of payloads to files — debug artifacts only, never unsampled at
-    scale. Returns number of files written."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    sampled = media.sample(fraction=sample_fraction, seed=7).collect()
-    for r in sampled:
-        with open(os.path.join(out_dir, f"{r['media_ref']}.img1"), "wb") as f:
-            f.write(bytes(r["content"]))
-    return len(sampled)
-
-
-def read_documents_jsonl(
-    spark: SparkSession,
-    path: str,
-    interleaved: bool = True,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """JSONL document ingestion — the delivery format web corpora actually
-    arrive in (one JSON object per line, optionally .gz/.bz2; Spark's
-    codec layer decompresses transparently).
-
-    Scale rules baked in:
-    - EXPLICIT schema, never inference: schema inference is a full extra
-      pass over the data before the real job can plan — a non-starter at
-      corpus scale.
-    - PERMISSIVE mode with a corrupt-record column: one malformed line in
-      a trillion must not kill the job; poison lines surface as rows with
-      ``corrupt_col`` set (and NULL fields) for quarantine, mirroring the
-      pipeline's poison-pill isolation for undecodable images.
-
-    ``interleaved=True`` reads the engine's native (doc_id, spans) shape;
-    False reads flat (doc_id, text) corpora (dedup/text-analysis inputs).
-    """
-    from pyspark.sql import types as T
-
-    from ocr_text_recognition_spark.schemas import DOCUMENTS_SCHEMA
-
-    if interleaved:
-        base = DOCUMENTS_SCHEMA
-    else:
-        base = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), True),
-                T.StructField("text", T.StringType(), True),
-            ]
-        )
-    schema = T.StructType(base.fields + [T.StructField(corrupt_col, T.StringType(), True)])
-    return (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-    )
-
-
 def iceberg_available(spark: SparkSession) -> bool:
     try:
         spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
@@ -144,35 +59,3 @@ def write_table(
         w = w.partitionBy(*partition_by).option("partitionOverwriteMode", "dynamic")
     w.parquet(ref)
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    path: str | None = None,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write a bucketed (hash-clustered) table — the co-located-join scale
-    path the extraction pipeline's media join relies on at 10^12 docs
-    (extraction/pipeline.py scale notes): two tables bucketed on the same
-    key with the same bucket count join WITHOUT a shuffle on either side
-    (plan-pinned in tests/test_plans.py::test_bucketed_join_no_shuffle).
-
-    Spark bucketing requires a saveAsTable (bucket metadata lives in the
-    catalog); pass ``path`` to keep the data external at a chosen
-    location. On Iceberg deployments the analogous layout is a
-    ``bucket(n, col)`` partition transform on the table DDL.
-    """
-    w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path:
-        w = w.option("path", path)
-    w.format("parquet").saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table with its bucket metadata intact (a plain
-    spark.read.parquet(path) would lose the clustering and re-shuffle)."""
-    return spark.table(table)

@@ -11,13 +11,6 @@ def spark():
         "tests",
         cores=4,
         shuffle_partitions=8,
-        # Spark 4.1's HDFS state store maintenance thread snapshots state
-        # versions concurrently with micro-batch commits; under rapid
-        # timeout-batch churn (applyInPandasWithState tests) that races
-        # into CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT ("Cannot perform
-        # commit during state checkpoint"). Tests produce a handful of
-        # state versions, so push maintenance past the test horizon.
-        extra_conf={"spark.sql.streaming.stateStore.maintenanceInterval": "3600s"},
     )
     yield s
 

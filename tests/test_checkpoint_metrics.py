@@ -316,22 +316,6 @@ def test_wave_arguments_are_validated(spark, small_corpus, tmp_path):
     assert not (tmp_path / "out").exists()
 
 
-def test_cer_zero_on_exact_match(spark, small_corpus):
-    _, _, golden_pd = small_corpus
-    golden = pandas_to_spark(spark, golden_pd, "documents")
-    cer = metrics.cer_vs_reference(golden, golden)
-    assert cer.agg(F.max("cer")).collect()[0][0] == 0.0
-
-
-def test_cer_detects_divergence(spark):
-    from ocr_text_recognition_spark.schemas import DOCUMENTS_SCHEMA
-
-    a = spark.createDataFrame([("d1", [("text", "abcd", "", 0)])], DOCUMENTS_SCHEMA)
-    b = spark.createDataFrame([("d1", [("text", "abXd", "", 0)])], DOCUMENTS_SCHEMA)
-    (row,) = metrics.cer_vs_reference(a, b).collect()
-    assert abs(row["cer"] - 0.25) < 1e-9
-
-
 def _golden_bucket_counts(spark, golden_pd, n_buckets):
     """{bucket: (docs, spans, chars, media spans)} of the golden spans,
     grouped by ``checkpoint.bucket_of``."""

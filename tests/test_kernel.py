@@ -330,18 +330,6 @@ class TestAdviceRegressions:
         out = _max_run_per_col(np.zeros((7, 0), dtype=np.uint8))
         assert out.shape == (0,) and out.dtype == np.int32
 
-    def test_xlsx_strips_xml_invalid_control_chars(self, tmp_path):
-        """A string cell containing XML-1.0-illegal control characters must
-        still produce a parseable .xlsx (chars stripped, legal \\t\\n kept)."""
-        from ocr_text_recognition_spark.xlsx import read_xlsx, write_xlsx
-
-        path = str(tmp_path / "ctrl.xlsx")
-        write_xlsx(path, ["a"], [("bad\x00mid\x1fend",), ("tab\tnl\nok",)])
-        cols, rows = read_xlsx(path)
-        assert cols == ["a"]
-        assert rows[0] == ("badmidend",)
-        assert rows[1] == ("tab\tnl\nok",)
-
 
 class TestRotationDeskew:
     """True small-angle rotation deskew (reference minAreaRect+warpAffine,

@@ -156,39 +156,6 @@ def test_dedup_pipeline_pure_sql_and_anti_join(spark, entry):
     assert "LeftAnti" in plan
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    """The media-join scale path (pipeline.py scale notes): two tables
-    bucketed on the join key with equal bucket counts sort-merge join with
-    ZERO Exchange nodes — the shuffle the bucketing exists to delete."""
-    from pyspark.sql import functions as F
-
-    from ocr_text_recognition_spark.sources import read_bucketed, write_bucketed
-
-    media = spark.range(0, 1000).select(
-        F.concat(F.lit("m"), F.col("id")).alias("media_ref"),
-        F.col("id").alias("payload"),
-    )
-    refs = spark.range(0, 3000).select(
-        F.concat(F.lit("m"), F.pmod("id", F.lit(1000))).alias("media_ref"),
-        F.col("id").alias("span_id"),
-    )
-    write_bucketed(media, "t_media_b", ["media_ref"], 8, path=str(tmp_path / "media_b"))
-    write_bucketed(refs, "t_refs_b", ["media_ref"], 8, path=str(tmp_path / "refs_b"))
-    try:
-        joined = (
-            read_bucketed(spark, "t_refs_b")
-            .hint("merge")  # force SMJ so broadcast doesn't mask the claim
-            .join(read_bucketed(spark, "t_media_b"), "media_ref")
-        )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 3000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_refs_b")
-        spark.sql("DROP TABLE IF EXISTS t_media_b")
-
-
 def test_sampling_and_cleaning_plans(spark, entry):
     """q44/q45 are pure SQL with WindowGroupLimit applied (rank<=K pushed
     below the final sort) and zero Python nodes."""
