@@ -180,14 +180,17 @@ def q06_scanline_merge(spark, sf_dir):
     )
 
 
-def _cells(spark, sf_dir):
+def _cells(spark, sf_dir, row_idx=None):
     """Synthetic long-format cells derived deterministically from events
     (one value per (doc,row,col) via max_by on event_id): value is
-    numeric-looking for even event_ids, text otherwise."""
+    numeric-looking for even event_ids, text otherwise. ``row_idx``
+    replaces the default row mapping, event_id mod 4."""
     ev = _t(spark, sf_dir, "events")
+    if row_idx is None:
+        row_idx = F.pmod("event_id", F.lit(4))
     return ev.groupBy(
         F.pmod("user_id", F.lit(10)).alias("doc_id"),
-        F.pmod("event_id", F.lit(4)).cast("int").alias("row_idx"),
+        row_idx.cast("int").alias("row_idx"),
         F.pmod(F.col("event_id") + 1, F.lit(3)).cast("int").alias("col_idx"),
     ).agg(
         F.max_by(
@@ -845,31 +848,19 @@ def q44_stratified_sample(spark, sf_dir):
     stratum, take the first K docs in md5(doc_id) order. Hash-ordered
     row_number instead of RNG sampling so the sample is reproducible
     across engines, runs, and cluster sizes (and DuckDB-verifiable)."""
+    from ocr_text_recognition_spark.operators.curation import top_k_per_group
     from ocr_text_recognition_spark.operators.textanalysis import lang_id
 
-    k = 50
     docs = _t(spark, sf_dir, "documents")
     tagged = docs.select("doc_id", lang_id(F.col("text")).alias("lang_pred"))
     order = [F.md5(F.col("doc_id").cast("string")), F.col("doc_id")]
     # Two-level top-K: with ~6 strata a single window would funnel the
-    # whole corpus through 6 reducer sorts. Phase 1 ranks within
-    # (stratum, salt) partitions and keeps each partition's top K —
-    # leaving <= K * n_salt survivors per stratum — and phase 2 ranks
-    # those. The md5 order is deterministic, so the final sample is
-    # byte-identical to the single-window form at any cluster size.
-    n_salt = 16
-    salted = tagged.withColumn("salt", F.pmod(F.hash("doc_id"), F.lit(n_salt)))
-    w1 = Window.partitionBy("lang_pred", "salt").orderBy(*order)
-    survivors = (
-        salted.withColumn("prn", F.row_number().over(w1))
-        .filter(F.col("prn") <= k)
-        .drop("prn", "salt")
-    )
-    w2 = Window.partitionBy("lang_pred").orderBy(*order)
-    return (
-        survivors.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select("doc_id", "lang_pred", "rn")
+    # whole corpus through 6 reducer sorts; the doc_id salt spreads each
+    # stratum over the phase-1 partitions. The md5 order is deterministic,
+    # so the sample is byte-identical to the single-window form at any
+    # cluster size.
+    return top_k_per_group(tagged, ["lang_pred"], order, 50, salt_on="doc_id").select(
+        "doc_id", "lang_pred", "rn"
     )
 
 
@@ -905,16 +896,13 @@ def q46_metadata_diacritics(spark, sf_dir):
     fixture whose rows exercise each shape (fixtures_meta.METADATA_DOCS,
     shared verbatim with the DuckDB oracle)."""
     from ocr_text_recognition_spark.fixtures_meta import METADATA_DOCS
-    from ocr_text_recognition_spark.operators.textops import (
-        METADATA_PATTERNS,
-        extract_metadata_field,
-    )
+    from ocr_text_recognition_spark.operators.textops import METADATA_PATTERNS, extract_metadata
 
     df = spark.createDataFrame(METADATA_DOCS, "doc_id int, txt string")
-    return df.select(
-        "doc_id",
-        *[extract_metadata_field(F.col("txt"), f).alias(f) for f in METADATA_PATTERNS],
-    )
+    # Field access on the struct folds into each field's expression; a
+    # select of "m.*" would keep the struct in a Project of its own.
+    meta = extract_metadata(F.col("txt"))
+    return df.select("doc_id", *[meta[f].alias(f) for f in METADATA_PATTERNS])
 
 
 def q47_incremental_lsh(spark, sf_dir):
@@ -941,39 +929,20 @@ def q47_incremental_lsh(spark, sf_dir):
     )
 
 
-def _cells_mixed(spark, sf_dir):
-    """_cells variant whose row mapping is shifted by doc_id, so row 0 of
-    even docs lands on even event_ids (numeric values -> Column_{i}
-    fallback) and row 0 of odd docs on odd event_ids (text values ->
-    header promotion) — both assemble_wide_table branches exercised."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.pmod("user_id", F.lit(10)).alias("doc_id"),
-        F.pmod(F.col("event_id") + F.pmod("user_id", F.lit(10)), F.lit(4))
-        .cast("int")
-        .alias("row_idx"),
-        F.pmod(F.col("event_id") + 1, F.lit(3)).cast("int").alias("col_idx"),
-    ).agg(
-        F.max_by(
-            F.when(
-                F.pmod("event_id", F.lit(2)) == 0,
-                F.format_number(F.round("value", 2), 2),
-            ).otherwise(F.col("event_type")),
-            F.col("event_id"),
-        ).alias("value")
-    )
-
-
 def q48_assembled_wide_table(spark, sf_dir):
     """Header promotion end-to-end (the reference's
     _create_dataframe_from_table_data + _is_header_row,
     table_ocr_service.py:284-336): pad to max width, promote the first
     row iff most of its padded cells are non-empty non-numeric, else
     Column_{i+1}. Cells are sparsified deterministically so the ''
-    padding path is genuinely exercised; doc parity selects the branch."""
+    padding path is genuinely exercised; doc parity selects the branch:
+    the row mapping is shifted by doc_id, so row 0 of even docs lands on
+    even event_ids (numeric values -> Column_{i} fallback) and row 0 of
+    odd docs on odd event_ids (text values -> header promotion)."""
     from ocr_text_recognition_spark.operators.tableops import assemble_wide_table
 
-    sparse = _cells_mixed(spark, sf_dir).filter(
+    row_idx = F.pmod(F.col("event_id") + F.pmod("user_id", F.lit(10)), F.lit(4))
+    sparse = _cells(spark, sf_dir, row_idx).filter(
         F.pmod(F.col("doc_id") + F.col("row_idx") + F.col("col_idx"), F.lit(7)) != 0
     )
     return assemble_wide_table(sparse)

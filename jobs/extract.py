@@ -10,12 +10,13 @@
         [--buckets-per-wave 8] [--run-id ID]
 
 Every run resumes idempotently: buckets already in the ledger are skipped.
-The ledger gets one ``(bucket, run_id, completed_at, wave_s)`` row per
-bucket it commits. With ``--metrics``, the run appends one ``(run_id,
-bucket, docs, spans, chars_decoded, media_spans)`` row per bucket it
-processed, counted in the JVM from those buckets' output only; it joins
-the ledger on ``(run_id, bucket)``. A run that processes nothing appends
-nothing.
+The ledger gets one ``(bucket, run_id, completed_at, wave_s, n_buckets)``
+row per bucket it commits; a resume with another ``--n-buckets`` than the
+ledger's fails before any work. With ``--metrics``, the run appends one
+``(run_id, bucket, docs, spans, chars_decoded, media_spans)`` row per
+bucket it processed, counted in the JVM from those buckets' output only;
+it joins the ledger on ``(run_id, bucket)``. A run that processes nothing
+appends nothing.
 """
 
 from __future__ import annotations
@@ -31,6 +32,10 @@ def main() -> None:
         DEFAULT_N_BUCKETS,
         run_with_checkpoints,
     )
+    from ocr_text_recognition_spark.kernel.reference_kernel import (
+        PREPROCESS_DEFAULTS,
+        PREPROCESS_OPTIONS,
+    )
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", required=True)
@@ -42,37 +47,24 @@ def main() -> None:
     ap.add_argument("--buckets-per-wave", type=int, default=DEFAULT_BUCKETS_PER_WAVE)
     ap.add_argument("--run-id", default=None)
     # kernel preprocessing for photographed/scanned corpora
-    # (enhanced_table_ocr_service.py:58-60 / ocr_model.py:66-68 semantics)
-    ap.add_argument("--binarizer", choices=["otsu", "adaptive"], default="otsu")
-    ap.add_argument("--adaptive-block", type=int, default=11)
+    # (enhanced_table_ocr_service.py:58-60 / ocr_model.py:66-68 semantics),
+    # with preprocess_image's values and defaults
+    option, default = PREPROCESS_OPTIONS, PREPROCESS_DEFAULTS
+    ap.add_argument("--binarizer", choices=option["binarizer"], default=default["binarizer"])
+    ap.add_argument("--adaptive-block", type=int, default=default["adaptive_block"])
     ap.add_argument("--rotate-portrait", action="store_true")
-    ap.add_argument("--denoise", choices=["median", "morph"], default="median")
+    ap.add_argument("--denoise", choices=option["denoise"], default=default["denoise"])
     ap.add_argument("--sharpen-first", action="store_true")
-    ap.add_argument("--deskew", choices=["shear", "rotation"], default="shear")
+    ap.add_argument("--deskew", choices=option["deskew"], default=default["deskew"])
     args = ap.parse_args()
 
-    if args.adaptive_block != 11 and args.binarizer != "adaptive":
+    if args.adaptive_block != default["adaptive_block"] and args.binarizer != "adaptive":
         ap.error("--adaptive-block requires --binarizer adaptive")
     if args.n_buckets < 1 or args.buckets_per_wave < 1:
         ap.error("--n-buckets and --buckets-per-wave must be >= 1")
     # one lineage key for the ledger rows and the metrics rows
     run_id = args.run_id or uuid.uuid4().hex[:12]
-    preprocess_kwargs = None
-    if (
-        args.binarizer != "otsu"
-        or args.rotate_portrait
-        or args.denoise != "median"
-        or args.sharpen_first
-        or args.deskew != "shear"
-    ):
-        preprocess_kwargs = {
-            "binarizer": args.binarizer,
-            "adaptive_block": args.adaptive_block,
-            "rotate_portrait": args.rotate_portrait,
-            "denoise": args.denoise,
-            "sharpen_first": args.sharpen_first,
-            "deskew": args.deskew,
-        }
+    preprocess_kwargs = {name: getattr(args, name) for name in PREPROCESS_DEFAULTS}
 
     from ocr_text_recognition_spark.extraction.metrics import bucket_metrics
     from ocr_text_recognition_spark.extraction.pipeline import extraction_session_conf
@@ -82,7 +74,7 @@ def main() -> None:
     # Scan/shuffle sizing for a compute-bound job: target >= 4 splits per
     # slot, clamped back to Spark's stock values at multi-GB inputs (the
     # helper is a no-op on a production-scale table). Local paths only;
-    # object-store inputs size themselves via the catalog/manifest.
+    # object-store and table inputs get Spark's stock split sizing.
     def _local_bytes(path: str) -> int:
         if os.path.isfile(path):
             return os.path.getsize(path)

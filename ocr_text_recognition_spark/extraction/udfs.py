@@ -54,9 +54,13 @@ def make_extract_ref_udf(**preprocess_kwargs):
     """Build the (kind, payload) -> text dispatch UDF with optional kernel
     preprocessing overrides (binarizer='adaptive', adaptive_block=...,
     rotate_portrait=True — see kernel.reference_kernel.preprocess_image).
-    The kwargs are captured in the closure and shipped to executors via
-    cloudpickle, so a photographed/scanned deployment selects the adaptive
-    threshold without touching the pipeline code."""
+    The kwargs are checked here, on the driver (ValueError on an unknown
+    name or value), then captured in the closure and shipped to executors
+    via cloudpickle, so a photographed/scanned deployment selects the
+    adaptive threshold without touching the pipeline code."""
+    from ocr_text_recognition_spark.kernel.reference_kernel import check_preprocess_options
+
+    check_preprocess_options(preprocess_kwargs)
 
     @pandas_udf(StringType())
     def _extract_ref_udf(

@@ -28,14 +28,6 @@ def _tune_allocator() -> None:
     packing on a 4-CPU host). Raising
     the threshold keeps image-sized buffers on the reusable sbrk heap.
     No-op on non-glibc platforms; results are unaffected either way."""
-    import os
-
-    # Retuning the process-wide allocator is a side effect a host
-    # application embedding this library may not want — opt out with
-    # SPARK_GRAFT_NO_MALLOPT=1 (results are identical either way; only
-    # kernel throughput under many-worker packing changes).
-    if os.environ.get("SPARK_GRAFT_NO_MALLOPT") == "1":
-        return
     try:
         import ctypes
 

@@ -20,6 +20,8 @@ executors, so per-pixel Python loops are forbidden.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 
 # Deskew search space (thousandths): ±DESKEW_MAX_SLOPE at DESKEW_STEP
@@ -253,6 +255,25 @@ def _antidiagonal_sums(a: np.ndarray) -> np.ndarray:
     return z.ravel()[: n * (w + n - 1)].reshape(n, w + n - 1).sum(axis=0)
 
 
+def _coarse_to_fine(
+    score: Callable[[int], float], limit: int, coarse_step: int, span: int, fine_step: int
+) -> dict[int, float]:
+    """{candidate: score} of a two-stage search over [-limit, limit]: every
+    ``coarse_step`` point, then every ``fine_step`` point within ``span``
+    of EACH coarse point within 0.5% of the best coarse score — a
+    non-unimodal surface (periodic vertical patterns, two stroke families)
+    can put the true fine-grid optimum next to the second coarse peak.
+    The caller makes the final pick."""
+    scores = {v: score(v) for v in range(-limit, limit + 1, coarse_step)}
+    best_coarse = max(scores.values())
+    centers = [v for v, sc in scores.items() if sc >= best_coarse * 0.995]
+    for center in centers:
+        for v in range(center - span, center + span + 1, fine_step):
+            if v not in scores and -limit <= v <= limit:
+                scores[v] = score(v)
+    return scores
+
+
 def estimate_shear_slope_milli(mask: np.ndarray) -> int:
     """Estimate the horizontal shear applied to an ink mask.
 
@@ -288,30 +309,12 @@ def estimate_shear_slope_milli(mask: np.ndarray) -> int:
         counts = _antidiagonal_sums(bands[::-1] if sm > 0 else bands)
         return float(np.dot(counts, counts))
 
-    # Two-stage search: coarse step-15 sweep, then step-5 refinement ±10
-    # around the coarse peak — ~21 projections instead of 49 for the same
-    # step-5 resolution. The refinement window (±10) exceeds the coarse
-    # half-step (7.5), so ANY fine-grid slope is reachable from its
-    # nearest coarse point; the surface is near-unimodal around the true
-    # slope for text masks. 0 is always evaluated, so the small-|slope|
-    # plateau rule below can still prefer "straight" on flat surfaces.
-    scores: dict[int, float] = {}
-    for sm in range(-DESKEW_MAX_SLOPE, DESKEW_MAX_SLOPE + 1, DESKEW_COARSE_STEP):
-        scores[sm] = _score(sm)
-    coarse_best = max(scores, key=lambda s: (scores[s], -abs(s)))
-    # Refine around every coarse peak within the 0.5% tie band of the best
-    # (not only the argmax): a non-unimodal sharpness surface — periodic
-    # vertical patterns, two competing stroke families — can put the true
-    # fine-grid optimum next to the SECOND coarse peak. Cost stays ~flat
-    # (the band usually holds one peak; each extra peak adds <= 4 probes).
-    best_coarse_score = scores[coarse_best]
-    refine_centers = [
-        sm for sm, sc in scores.items() if sc >= best_coarse_score * 0.995
-    ]
-    for center in refine_centers:
-        for sm in range(center - DESKEW_REFINE_SPAN, center + DESKEW_REFINE_SPAN + 1, DESKEW_STEP):
-            if sm not in scores and -DESKEW_MAX_SLOPE <= sm <= DESKEW_MAX_SLOPE:
-                scores[sm] = _score(sm)
+    # ~21 projections instead of 49 for the step-5 grid; the ±10 refinement
+    # exceeds the coarse half-step (7.5), so any fine-grid slope is
+    # reachable. 0 is always scored, so the plateau rule can pick "straight".
+    scores = _coarse_to_fine(
+        _score, DESKEW_MAX_SLOPE, DESKEW_COARSE_STEP, DESKEW_REFINE_SPAN, DESKEW_STEP
+    )
     # Scores within 0.5% of the max are statistically indistinguishable
     # (binarization noise on anti-aliased step edges); among those
     # near-ties choose the SMALLEST |slope| — the least destructive
@@ -393,8 +396,8 @@ def estimate_rotation_millideg(mask: np.ndarray) -> int:
 
     For each candidate angle, rotate ink-pixel coordinates and score the
     sharpness of the ROW projection (sum of squared per-row counts) —
-    maximal when horizontal text lines re-align. Same coarse-to-fine +
-    0.5%-tie-band machinery as the shear estimator; returns the angle r
+    maximal when horizontal text lines re-align. Searched by
+    ``_coarse_to_fine``, as the shear estimator is; returns the angle r
     such that the mask looks like content rotated by r (so the inverse
     correction is rotate_mask(mask, -r))."""
     ys, xs = np.nonzero(mask)
@@ -410,16 +413,9 @@ def estimate_rotation_millideg(mask: np.ndarray) -> int:
         counts = np.bincount(yp)
         return float((counts.astype(np.float64) ** 2).sum())
 
-    scores: dict[int, float] = {}
-    for md in range(-ROTATION_MAX_MILLIDEG, ROTATION_MAX_MILLIDEG + 1, ROTATION_COARSE_STEP):
-        scores[md] = _score(md)
-    best_coarse = max(scores.values())
-    centers = [md for md, sc in scores.items() if sc >= best_coarse * 0.995]
-    span = ROTATION_COARSE_STEP  # past the coarse half-step on both sides
-    for center in centers:
-        for md in range(center - span, center + span + 1, ROTATION_FINE_STEP):
-            if md not in scores and -ROTATION_MAX_MILLIDEG <= md <= ROTATION_MAX_MILLIDEG:
-                scores[md] = _score(md)
+    # refine ±one coarse step: past the coarse half-step on both sides
+    top, coarse = ROTATION_MAX_MILLIDEG, ROTATION_COARSE_STEP
+    scores = _coarse_to_fine(_score, top, coarse, coarse, ROTATION_FINE_STEP)
     # Final pick is a PURE argmax (deterministic smaller-|angle| tie-break)
     # — unlike the shear estimator's 0.5% plateau rule, which here would
     # systematically bias the angle toward zero by up to 1.5 fine steps

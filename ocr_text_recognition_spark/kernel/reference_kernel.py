@@ -14,6 +14,8 @@ deskew -> (ruled grid? table path : free-text path).
 
 from __future__ import annotations
 
+import inspect
+
 import numpy as np
 
 from ocr_text_recognition_spark.kernel import imageops, recognize, tableparse
@@ -22,6 +24,33 @@ from ocr_text_recognition_spark.kernel.imgcodec import decode_image
 # Serialization of a recognized table into one span text: cells joined by
 # ' | ' (not in the glyph atlas, so unambiguous), rows by newline.
 CELL_SEP = " | "
+
+# The values each preprocess_image option takes (its default is in the
+# signature, see PREPROCESS_DEFAULTS); adaptive_block takes any odd int > 1,
+# as cv2's blockSize.
+PREPROCESS_OPTIONS = {
+    "binarizer": ("otsu", "adaptive"),
+    "denoise": ("median", "morph"),
+    "deskew": ("shear", "rotation"),
+    "rotate_portrait": (False, True),
+    "sharpen_first": (False, True),
+}
+
+
+def check_preprocess_options(options: dict) -> None:
+    """Raise ValueError naming the first key of ``options`` that is not a
+    preprocess_image option, or whose value that option does not take:
+    preprocess_image runs the default stage for an unknown choice, so a
+    misspelled option would otherwise change nothing, silently."""
+    for name, value in options.items():
+        if name == "adaptive_block":
+            ok = isinstance(value, (int, np.integer)) and value > 1 and value % 2 == 1
+        elif name in PREPROCESS_DEFAULTS:
+            ok = value in PREPROCESS_OPTIONS[name]
+        else:
+            raise ValueError(f"unknown kernel option {name!r}")
+        if not ok:
+            raise ValueError(f"kernel option {name}={value!r} is not valid")
 
 
 def preprocess_image(
@@ -79,6 +108,14 @@ def preprocess_image(
     from ocr_text_recognition_spark.kernel import segment
 
     return segment.remove_specks(mask)
+
+
+# preprocess_image's options and their defaults, read off its signature.
+PREPROCESS_DEFAULTS = {
+    name: param.default
+    for name, param in inspect.signature(preprocess_image).parameters.items()
+    if name != "img"
+}
 
 
 def recognize_media_bytes(data: bytes | None, **preprocess_kwargs) -> str:

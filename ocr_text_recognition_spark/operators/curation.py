@@ -26,23 +26,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_text_recognition_spark.operators.textanalysis import (
+    ngrams,
     quality_score,
     shingles,
     tokens,
 )
-
-
-def ngrams(text: Column, n: int = 2) -> Column:
-    """ALL word n-grams in order (duplicates kept — this is the
-    repetition-measurement unit; `textanalysis.shingles` is the distinct
-    variant used for set-similarity). Falls back to the whole text as one
-    n-gram when the doc has fewer than n tokens, mirroring shingles()."""
-    toks = tokens(text)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
 def contamination_overlap(

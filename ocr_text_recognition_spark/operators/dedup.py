@@ -17,7 +17,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_text_recognition_spark.operators.textanalysis import fingerprint, shingles, tokens
@@ -59,53 +59,18 @@ def lsh_candidate_pairs(
     """Band the signature, bucket-join within (band_id, band_key), emit
     distinct candidate pairs (id_a < id_b) plus their estimated Jaccard
     (fraction of matching minhashes)."""
-    rows_per_band = num_perm // bands
-    band_keys = [
-        F.md5(
-            F.concat_ws("|", *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)])
-        ).alias(f"band_{b}")
-        for b in range(bands)
-    ]
     # The signature computation (shingle explode + k-way min agg) feeds BOTH
     # sides of the self-join; persist it so the lineage runs once. At real
     # scale you materialize signatures to a table between the two jobs —
     # persist is the in-session analog.
-    banded = signatures.select(
-        "id", *[F.col(f"mh_{i}") for i in range(num_perm)], *band_keys
-    ).persist()
-    stacked = banded.select(
-        "id",
-        *[F.col(f"mh_{i}") for i in range(num_perm)],
-        F.explode(
-            F.array(*[F.struct(F.lit(b).alias("band_id"), F.col(f"band_{b}").alias("bkey")) for b in range(bands)])
-        ).alias("band"),
-    ).select("id", *[f"mh_{i}" for i in range(num_perm)], "band.band_id", "band.bkey")
-    a = stacked.select(
-        F.col("id").alias("id_a"),
-        *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(num_perm)],
-        "band_id",
-        "bkey",
-    )
-    b = stacked.select(
-        F.col("id").alias("id_b"),
-        *[F.col(f"mh_{i}").alias(f"b_{i}") for i in range(num_perm)],
-        "band_id",
-        "bkey",
-    )
-    joined = a.join(b, ["band_id", "bkey"]).filter(F.col("id_a") < F.col("id_b"))
-    match_frac = sum(
-        F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0) for i in range(num_perm)
-    ) / F.lit(float(num_perm))
-    return (
-        joined.select("id_a", "id_b", match_frac.alias("est_jaccard"))
-        .groupBy("id_a", "id_b")
-        .agg(F.max("est_jaccard").alias("est_jaccard"))
-    )
+    stacked = _explode_bands(_band_keys(signatures, num_perm, bands).persist(), num_perm, bands)
+    pairs = _pair_estimates(stacked, stacked, "id_a", "id_b", num_perm)
+    return pairs.filter(F.col("id_a") < F.col("id_b"))
 
 
-def _banded(signatures: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    """(id, mh_*) -> one row per (id, band_id, bkey): the narrow band-key
-    projection + explode shared by the self-join and incremental paths."""
+def _band_keys(signatures: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """(id, mh_*) -> (id, mh_*, band_0..band_{bands-1}): each band's key is
+    the md5 of its rows' minhashes."""
     rows_per_band = num_perm // bands
     band_keys = [
         F.md5(
@@ -113,15 +78,41 @@ def _banded(signatures: DataFrame, num_perm: int, bands: int) -> DataFrame:
         ).alias(f"band_{b}")
         for b in range(bands)
     ]
-    return signatures.select(
-        "id", *[F.col(f"mh_{i}") for i in range(num_perm)], *band_keys
-    ).select(
+    return signatures.select("id", *[F.col(f"mh_{i}") for i in range(num_perm)], *band_keys)
+
+
+def _explode_bands(keyed: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """``_band_keys`` output -> one row per (id, band_id, bkey), minhashes
+    kept for the match-fraction estimate."""
+    return keyed.select(
         "id",
         *[F.col(f"mh_{i}") for i in range(num_perm)],
         F.explode(
             F.array(*[F.struct(F.lit(b).alias("band_id"), F.col(f"band_{b}").alias("bkey")) for b in range(bands)])
         ).alias("band"),
     ).select("id", *[f"mh_{i}" for i in range(num_perm)], "band.band_id", "band.bkey")
+
+
+def _pair_estimates(
+    left: DataFrame, right: DataFrame, left_id: str, right_id: str, num_perm: int
+) -> DataFrame:
+    """Join two ``_explode_bands`` outputs on (band_id, bkey) and emit
+    (left_id, right_id, est_jaccard): the fraction of matching minhashes,
+    once per pair however many bands it shares."""
+
+    def side(bands: DataFrame, id_name: str, prefix: str) -> DataFrame:
+        mh = [F.col(f"mh_{i}").alias(f"{prefix}_{i}") for i in range(num_perm)]
+        return bands.select(F.col("id").alias(id_name), *mh, "band_id", "bkey")
+
+    joined = side(left, left_id, "a").join(side(right, right_id, "b"), ["band_id", "bkey"])
+    match_frac = sum(
+        F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0) for i in range(num_perm)
+    ) / F.lit(float(num_perm))
+    return (
+        joined.select(left_id, right_id, match_frac.alias("est_jaccard"))
+        .groupBy(left_id, right_id)
+        .agg(F.max("est_jaccard").alias("est_jaccard"))
+    )
 
 
 def lsh_candidate_pairs_incremental(
@@ -140,27 +131,9 @@ def lsh_candidate_pairs_incremental(
     ordering constraint — the two sides are disjoint id universes. At
     scale the small new batch makes the join broadcast-eligible on the
     new side; AQE picks that up from runtime sizes."""
-    a = _banded(new_sigs, num_perm, bands).select(
-        F.col("id").alias("new_id"),
-        *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(num_perm)],
-        "band_id",
-        "bkey",
-    )
-    b = _banded(corpus_sigs, num_perm, bands).select(
-        F.col("id").alias("corpus_id"),
-        *[F.col(f"mh_{i}").alias(f"b_{i}") for i in range(num_perm)],
-        "band_id",
-        "bkey",
-    )
-    joined = a.join(b, ["band_id", "bkey"])
-    match_frac = sum(
-        F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0) for i in range(num_perm)
-    ) / F.lit(float(num_perm))
-    return (
-        joined.select("new_id", "corpus_id", match_frac.alias("est_jaccard"))
-        .groupBy("new_id", "corpus_id")
-        .agg(F.max("est_jaccard").alias("est_jaccard"))
-    )
+    new = _explode_bands(_band_keys(new_sigs, num_perm, bands), num_perm, bands)
+    corpus = _explode_bands(_band_keys(corpus_sigs, num_perm, bands), num_perm, bands)
+    return _pair_estimates(new, corpus, "new_id", "corpus_id", num_perm)
 
 
 def hot_shingles(
@@ -619,6 +592,22 @@ def sorted_neighborhood_pairs(
     )
 
 
+def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id long, toks): the normalized tokens substring dedup works on."""
+    return docs.select(
+        F.col(id_col).cast("long").alias("doc_id"), tokens(F.col(text_col)).alias("toks")
+    )
+
+
+def _window_hashes(window: int) -> Column:
+    """md5 of each ``window``-token run of ``toks``, in position order:
+    one JVM-side ``transform`` over a ``sequence``."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size("toks") - F.lit(window - 1)),
+        lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("toks"), i, window))),
+    )
+
+
 def substring_dup_pairs(
     docs: DataFrame,
     id_col: str,
@@ -644,24 +633,8 @@ def substring_dup_pairs(
     ``max_shingle_df``). Returns (doc_a, doc_b, n_shared_windows),
     doc_a < doc_b; at removal time the window hashes themselves (not
     emitted here) locate the span to cut."""
-    toks = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        tokens(F.col(text_col)).alias("toks"),
-    ).filter(F.size("toks") >= window)
-    wins = (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("toks") - F.lit(window - 1)),
-                    lambda i: F.md5(
-                        F.concat_ws(" ", F.slice(F.col("toks"), i, window))
-                    ),
-                )
-            ).alias("wh"),
-        )
-        .distinct()
-    )
+    toks = _doc_tokens(docs, id_col, text_col).filter(F.size("toks") >= window)
+    wins = toks.select("doc_id", F.explode(_window_hashes(window)).alias("wh")).distinct()
     wdf = wins.groupBy("wh").agg(F.count("*").alias("wdf"))
     keep = wins.join(wdf.filter(F.col("wdf") <= max_window_df), "wh").select(
         "doc_id", "wh"
@@ -704,18 +677,9 @@ def substring_dup_spans(
     Returns (doc_id, cut_start, cut_end, n_windows): 1-based inclusive
     token indexes to cut, and how many duplicated windows the interval
     absorbed."""
-    toks = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        tokens(F.col(text_col)).alias("toks"),
-    ).filter(F.size("toks") >= window)
+    toks = _doc_tokens(docs, id_col, text_col).filter(F.size("toks") >= window)
     pos = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - F.lit(window - 1)),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("toks"), i, window))),
-            )
-        ).alias("pos", "wh"),
+        "doc_id", F.posexplode(_window_hashes(window)).alias("pos", "wh")
     ).select("doc_id", (F.col("pos") + 1).cast("int").alias("win_start"), "wh")
     wdf = (
         pos.select("doc_id", "wh")
@@ -780,10 +744,7 @@ def substring_dedup_apply(
             F.collect_list(F.struct("cut_start", "cut_end")).alias("cuts")
         )
     )
-    toks = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        tokens(F.col(text_col)).alias("toks"),
-    )
+    toks = _doc_tokens(docs, id_col, text_col)
     joined = toks.join(cuts, "doc_id", "left").withColumn(
         "cuts", F.coalesce(F.col("cuts"), F.array())
     )

@@ -8,7 +8,7 @@ surface as valid=false rows through the same poison-pill contract.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -29,42 +29,46 @@ IMAGE_META_SCHEMA = T.StructType(
 )
 
 
-def image_metadata(media: DataFrame) -> DataFrame:
-    """(media_ref, content) -> typed metadata per image. Decode happens
-    inside Arrow batches; corrupt payloads yield valid=false rows instead
-    of failing the task (poison-pill isolation at 10^12 scale)."""
+def _parsed_metadata(
+    media: DataFrame, parse: Callable[[bytes], dict], schema: T.StructType
+) -> DataFrame:
+    """(media_ref, content) -> one ``schema`` row per payload: ``parse``'s
+    fields plus n_bytes and valid=true, or, when ``parse`` raises on a
+    corrupt or unsupported payload, NULL fields with valid=false (poison-pill
+    isolation: one bad payload never fails the task). Runs inside Arrow
+    batches via mapInPandas."""
+    cols = [f.name for f in schema.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                n = len(content) if content is not None else 0
+                row = dict.fromkeys(cols)
+                row.update(media_ref=ref, n_bytes=len(content) if content is not None else 0)
                 try:
-                    img = decode_image(bytes(content))
-                    rows.append(
-                        {
-                            "media_ref": ref,
-                            "height": img.shape[0],
-                            "width": img.shape[1],
-                            "n_bytes": n,
-                            "ink_density": float((img < 128).mean()),
-                            "valid": True,
-                        }
-                    )
+                    row.update(parse(bytes(content)), valid=True)
                 except Exception:
-                    rows.append(
-                        {
-                            "media_ref": ref,
-                            "height": None,
-                            "width": None,
-                            "n_bytes": n,
-                            "ink_density": None,
-                            "valid": False,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_META_SCHEMA.fields])
+                    row["valid"] = False
+                rows.append(row)
+            yield pd.DataFrame(rows, columns=cols)
 
-    return media.mapInPandas(gen, IMAGE_META_SCHEMA)
+    return media.mapInPandas(gen, schema)
+
+
+def image_metadata(media: DataFrame) -> DataFrame:
+    """(media_ref, content) -> typed metadata per image. Decode happens
+    inside Arrow batches; corrupt payloads yield valid=false rows instead
+    of failing the task (poison-pill isolation at 10^12 scale)."""
+
+    def parse(payload: bytes) -> dict:
+        img = decode_image(payload)
+        return {
+            "height": img.shape[0],
+            "width": img.shape[1],
+            "ink_density": float((img < 128).mean()),
+        }
+
+    return _parsed_metadata(media, parse, IMAGE_META_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -155,26 +159,7 @@ def audio_metadata(media: DataFrame) -> DataFrame:
     formats (mp3/aac/flac) need an external codec and surface as
     valid=false here — a deployment swaps a soundfile/ffmpeg call into
     this same mapInPandas shape."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                n = len(content) if content is not None else 0
-                try:
-                    m = parse_wav(bytes(content))
-                    rows.append({"media_ref": ref, **m, "n_bytes": n, "valid": True})
-                except Exception:
-                    rows.append(
-                        {
-                            "media_ref": ref, "sample_rate": None, "channels": None,
-                            "bits": None, "duration_s": None, "rms": None,
-                            "n_bytes": n, "valid": False,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_META_SCHEMA.fields])
-
-    return media.mapInPandas(gen, AUDIO_META_SCHEMA)
+    return _parsed_metadata(media, parse_wav, AUDIO_META_SCHEMA)
 
 
 VIDEO_META_SCHEMA = T.StructType(
@@ -260,23 +245,4 @@ def video_metadata(media: DataFrame) -> DataFrame:
     (PyAV/ffmpeg) and belongs in this same mapInPandas shape when one is
     available; the metadata half — brand, duration, dimensions, track
     count — is pure header structure and is fully implemented here."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, content in zip(pdf["media_ref"], pdf["content"]):
-                n = len(content) if content is not None else 0
-                try:
-                    m = parse_mp4(bytes(content))
-                    rows.append({"media_ref": ref, **m, "n_bytes": n, "valid": True})
-                except Exception:
-                    rows.append(
-                        {
-                            "media_ref": ref, "major_brand": None, "duration_s": None,
-                            "width": None, "height": None, "n_tracks": None,
-                            "n_bytes": n, "valid": False,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_META_SCHEMA.fields])
-
-    return media.mapInPandas(gen, VIDEO_META_SCHEMA)
+    return _parsed_metadata(media, parse_mp4, VIDEO_META_SCHEMA)

@@ -43,6 +43,24 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _cosine_topk(
+    scored: DataFrame, k: int, query_id_col: str, id_col: str, *extra_cols: str
+) -> DataFrame:
+    """Per query, the k rows of ``scored`` with the highest ``cos``:
+    (query_id_col, id_col, *extra_cols, cos, rank). Ranks on the ROUNDED
+    cosine with an id tiebreak, so a last-ulp difference between two
+    engines' double cosines cannot flip ranks or the top-k boundary (the
+    same invariant as bm25_topk)."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.desc(F.round("cos", 6)), F.asc(id_col)
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, id_col, *extra_cols, "cos", "rank")
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -60,15 +78,7 @@ def brute_force_topk(
         id_col,
         cosine(F.col(vec_col), F.col("q_vec")).alias("cos"),
     )
-    # rounded-cosine rank: cross-engine ulp drift must not flip ranks
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc(F.round("cos", 6)), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos", "rank")
-    )
+    return _cosine_topk(scored, k, query_id_col, id_col)
 
 
 def hyperplanes(dim: int, n_planes: int = 8, seed: int = 7) -> list[list[float]]:
@@ -125,15 +135,7 @@ def lsh_topk(
     scored = e.join(q, "bucket").select(
         query_id_col, id_col, cosine(F.col(vec_col), F.col("q_vec")).alias("cos")
     )
-    # rounded-cosine rank: cross-engine ulp drift must not flip ranks
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc(F.round("cos", 6)), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos", "rank")
-    )
+    return _cosine_topk(scored, k, query_id_col, id_col)
 
 
 def ivf_centroids(
@@ -226,15 +228,7 @@ def ivf_topk(
     scored = assigned.join(F.broadcast(probes), "cid").select(
         query_id_col, id_col, cosine(F.col(vec_col), F.col("q_vec")).alias("cos")
     )
-    # rounded-cosine rank: cross-engine ulp drift must not flip ranks
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc(F.round("cos", 6)), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos", "rank")
-    )
+    return _cosine_topk(scored, k, query_id_col, id_col)
 
 
 def embedding_near_dup(
@@ -365,14 +359,4 @@ def hard_negative_topk(
             cosine(F.col(vec_col), F.col("q_vec")).alias("cos"),
         )
     )
-    # Rank on the ROUNDED cosine (id tiebreak) — same cross-engine
-    # invariant as bm25_topk: a last-ulp difference between two engines'
-    # double cosines must not flip ranks or the top-k boundary.
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc(F.round("cos", 6)), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, label_col, "cos", "rank")
-    )
+    return _cosine_topk(scored, k, query_id_col, id_col, label_col)

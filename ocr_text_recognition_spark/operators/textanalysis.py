@@ -30,6 +30,19 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), TOKEN_SPLIT), lambda t: t != "")
 
 
+def ngrams(text: Column, n: int = 2) -> Column:
+    """ALL word n-grams in order (duplicates kept — the repetition-
+    measurement unit; ``shingles`` is the distinct variant used for
+    set-similarity). Falls back to the whole text as one n-gram when the
+    doc has fewer than n tokens."""
+    toks = tokens(text)
+    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))),
+    ).otherwise(F.array(F.concat_ws(" ", toks)))
+
+
 def token_count_ws(text: Column) -> Column:
     """Whitespace token count."""
     return F.size(tokens(text))
@@ -114,12 +127,7 @@ def fingerprint(text: Column) -> Column:
 
 def shingles(text: Column, n: int = 3) -> Column:
     """Word n-gram shingles (distinct), the unit for MinHash/Jaccard."""
-    toks = tokens(text)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))))
-        .otherwise(F.array(F.concat_ws(" ", toks)))
-    )
+    return F.array_distinct(ngrams(text, n))
 
 
 def rolling_fingerprint(text: Column, n: int = 3) -> Column:

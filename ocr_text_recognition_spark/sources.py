@@ -26,13 +26,17 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def _is_table_ident(ref: str) -> bool:
-    return "/" not in ref and "\\" not in ref and "." in ref
+def _is_table_ident(spark: SparkSession, ref: str) -> bool:
+    """A table is a ref without path separators whose first dotted part names
+    a configured catalog (``local.db.documents``); ``docs.parquet`` is a path."""
+    if "/" in ref or "\\" in ref or "." not in ref:
+        return False
+    return spark.conf.get(f"spark.sql.catalog.{ref.split('.', 1)[0]}", None) is not None
 
 
 def read_table(spark: SparkSession, ref: str) -> DataFrame:
     """ref = Iceberg table identifier (catalog.db.table) or a parquet path."""
-    if _is_table_ident(ref) and iceberg_available(spark):
+    if _is_table_ident(spark, ref) and iceberg_available(spark):
         return spark.read.format("iceberg").load(ref)
     return spark.read.parquet(ref)
 
@@ -47,7 +51,7 @@ def write_table(
     available, dynamic-partition parquet overwrite otherwise. Both are
     idempotent at the partition granularity (the checkpoint contract)."""
     spark = df.sparkSession
-    if _is_table_ident(ref) and iceberg_available(spark):
+    if _is_table_ident(spark, ref) and iceberg_available(spark):
         w = df.writeTo(ref)
         if mode == "overwrite":
             w.overwritePartitions()

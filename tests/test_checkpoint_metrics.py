@@ -386,3 +386,93 @@ def test_resume_over_ledger_without_wave_s(spark, small_corpus, tmp_path):
     assert sorted(r["bucket"] for r in rows) == list(range(8))
     assert all(r["wave_s"] is None for r in rows if r["run_id"] == "old")
     assert all(r["wave_s"] > 0 for r in rows if r["run_id"] == "new")
+
+
+def test_resume_with_other_bucket_count_is_refused(spark, small_corpus, tmp_path):
+    """Bucket numbers name different doc_id sets under another bucket
+    count, so a resume with another ``n_buckets`` than the ledger's raises
+    before any wave (it would write some documents twice): the ledger and
+    the output stay as the killed run left them, and a resume with the
+    ledger's count still reaches the golden."""
+    docs_pd, media_pd, golden_pd = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    out, ledger = str(tmp_path / "out"), str(tmp_path / "ledger")
+
+    first = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3, max_waves=1
+    )
+    written = sorted(os.listdir(out))
+    with pytest.raises(ValueError, match=r"n_buckets=\[8\], not 16"):
+        checkpoint.run_with_checkpoints(
+            spark, docs, media, out, ledger, n_buckets=16, buckets_per_wave=3
+        )
+    assert sorted(os.listdir(out)) == written
+    rows = spark.read.schema(checkpoint.LEDGER_SCHEMA).parquet(ledger).collect()
+    assert sorted(r["bucket"] for r in rows) == sorted(first)
+    assert {r["n_buckets"] for r in rows} == {8}
+
+    rest = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3
+    )
+    assert sorted(first + rest) == list(range(8))
+    assert _as_dict(checkpoint.read_output(spark, out).collect()) == _as_dict(
+        r for _, r in golden_pd.iterrows()
+    )
+
+
+def test_waves_do_not_share_local_properties(spark, small_corpus, tmp_path, monkeypatch):
+    """Each wave runs with its own copy of the caller's local properties. A
+    wave's queries write their SQL execution id there, so one copy shared by
+    two running waves would hand one wave's id to the other's jobs."""
+    docs_pd, media_pd, _ = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    identity = spark._jvm.java.lang.System.identityHashCode
+    seen = []
+    real_write_wave = checkpoint.write_wave
+
+    def recording_write_wave(*args):
+        seen.append(identity(spark.sparkContext._jsc.sc().getLocalProperties()))
+        return real_write_wave(*args)
+
+    monkeypatch.setattr(checkpoint, "write_wave", recording_write_wave)
+    done = checkpoint.run_with_checkpoints(
+        spark, docs, media, str(tmp_path / "out"), str(tmp_path / "ledger"),
+        n_buckets=8, buckets_per_wave=2,
+    )
+    assert done == list(range(8))
+    assert len(seen) == 4 and len(set(seen)) == 4
+
+
+def test_waves_run_with_pinned_threads_off(spark, small_corpus, tmp_path, monkeypatch):
+    """With PySpark's pinned-thread mode off, ``inheritable_thread_target``
+    hands back its argument (the session) instead of a wrapper; the waves
+    then run ``write_wave`` as it is and the run still reaches the golden."""
+    docs_pd, media_pd, golden_pd = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    monkeypatch.setattr(checkpoint, "inheritable_thread_target", lambda f: f)
+    out = str(tmp_path / "out")
+    done = checkpoint.run_with_checkpoints(
+        spark, docs, media, out, str(tmp_path / "ledger"), n_buckets=8, buckets_per_wave=3
+    )
+    assert done == list(range(8))
+    assert _as_dict(checkpoint.read_output(spark, out).collect()) == _as_dict(
+        r for _, r in golden_pd.iterrows()
+    )
+
+
+def test_default_kernel_options_run_the_shared_ref_udf(spark, small_corpus, monkeypatch):
+    """The job passes all six kernel options through; left at
+    preprocess_image's defaults they select the module's shared ref UDF,
+    the one the counted tests and the benchmark run."""
+    from ocr_text_recognition_spark.kernel.reference_kernel import PREPROCESS_DEFAULTS
+
+    docs_pd, media_pd, _ = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    ref_udf, calls = _counting_ref_udf(spark)
+    monkeypatch.setattr(pipeline, "extract_ref_udf", ref_udf)
+    refs = pipeline.recognize_refs(spark, docs, media, dict(PREPROCESS_DEFAULTS)).collect()
+    assert calls.value == len(refs) > 0

@@ -6,6 +6,9 @@ per document, (kind, text, media_ref, order) of every span.
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_text_recognition_spark.extraction.pipeline import (
@@ -145,6 +148,34 @@ def test_preprocess_kwargs_flow_to_media_udf(spark, small_corpus):
                 )
             assert s["text"] == want_cache[ref], ref
     assert want_cache, "corpus contained no media spans"
+
+
+def test_kernel_options_are_checked_on_the_driver(spark, small_corpus):
+    """An unknown kernel option name or value raises ValueError when the
+    ref UDF is built on the driver, not in a Python worker: the kernel
+    itself would run its default stage for an unknown choice."""
+    from ocr_text_recognition_spark.extraction.udfs import make_extract_ref_udf
+
+    docs_pd, media_pd, _ = small_corpus
+    docs = pandas_to_spark(spark, docs_pd, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+    bad = [
+        ({"binarizer": "adaptve"}, "binarizer='adaptve'"),
+        ({"denoise": "gauss"}, "denoise='gauss'"),
+        ({"deskew": "affine"}, "deskew='affine'"),
+        ({"adaptive_block": 10}, "adaptive_block=10"),
+        ({"rotate_portrait": "yes"}, "rotate_portrait='yes'"),
+        ({"binarise": "adaptive"}, "unknown kernel option 'binarise'"),
+    ]
+    for kwargs, message in bad:
+        with pytest.raises(ValueError, match=re.escape(message)):
+            make_extract_ref_udf(**kwargs)
+        with pytest.raises(ValueError, match=re.escape(message)):
+            run_extraction(spark, docs, media, preprocess_kwargs=kwargs)
+    make_extract_ref_udf(
+        binarizer="adaptive", adaptive_block=15, rotate_portrait=True,
+        denoise="morph", sharpen_first=True, deskew="rotation",
+    )
 
 
 def test_extraction_session_conf_scales_and_clamps():

@@ -124,9 +124,9 @@ def test_checkpoint_wave_joins_ref_table_only(spark, small_corpus, tmp_path):
     scans = [desc for name, desc in nodes if name.startswith("Scan")]
     assert len(scans) == 1 and "ReadSchema: struct<doc_id:string,spans:" in scans[0], scans
 
-    ledger = ledger_frame(spark, [0, 5], "run", 0.5)
+    ledger = ledger_frame(spark, [0, 5], "run", 0.5, 8)
     assert ledger.schema.simpleString() == (
-        "struct<bucket:int,run_id:string,completed_at:double,wave_s:double>"
+        "struct<bucket:int,run_id:string,completed_at:double,wave_s:double,n_buckets:int>"
     )
     plan = _plan(ledger)
     assert "ExistingRDD" not in plan and "EvalPython" not in plan, plan
