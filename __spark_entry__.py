@@ -41,7 +41,7 @@ def _dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: build an interleaved text+media corpus from the sf0.001
     documents table, run the full extraction pipeline (Arrow-batched OCR
-    kernel + HTML main-content + salted reassembly), return per-doc stats."""
+    kernel + HTML main-content + doc_id reassembly), return per-doc stats."""
     from ocr_text_recognition_spark import corpus
     from ocr_text_recognition_spark.extraction.pipeline import run_extraction
     from ocr_text_recognition_spark.io_pandas import pandas_to_spark
@@ -468,7 +468,7 @@ def q28_extract_main_text(spark, sf_dir):
 
 def q29_extraction_pipeline(spark, sf_dir):
     """Full interleaved extraction on a generated corpus (kernel UDFs +
-    salted reassembly). The DuckDB oracle reads the committed golden-span
+    doc_id reassembly). The DuckDB oracle reads the committed golden-span
     fixture (fixtures/golden_spans_24.parquet, produced by the independent
     plain-Python corpus.make_golden path) and recomputes the same per-doc
     stats *and an md5 digest of the full (kind, text, media_ref, offset)

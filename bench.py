@@ -5,7 +5,7 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 end-to-end with the noop sink (computes everything, writes nothing).
 
 The extraction block reports docs/sec and chars/sec of the full
-interleaved pipeline (kernel UDFs + salted reassembly) from one run of the
+interleaved pipeline (kernel UDFs + doc_id reassembly) from one run of the
 layered benchmark's ``extract_mixed`` workload (``perfbench/run.py``), in a
 child process pinned to the same CPU count.
 """

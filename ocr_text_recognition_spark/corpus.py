@@ -11,7 +11,7 @@ plus golden extracted spans frozen through the plain-numpy kernel
 (kernel/reference_kernel.py) — the pytest oracle for span-sequence equality.
 
 Seeded; no external data. Skew knob: a small fraction of documents get many
-extra media spans (exercises explicit salting, BASELINE.json:6); media refs
+extra media spans (the skew knob, BASELINE.json:6); media refs
 draw from a shared pool so the pipeline's recognize-each-distinct-ref-once
 optimization is observable.
 """

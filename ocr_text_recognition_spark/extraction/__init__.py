@@ -1,5 +1,5 @@
 """Spark-facing extraction layer: HTML main-content heuristics, Arrow-batched
-kernel UDFs, the distributed pipeline, salting, checkpointing, metrics.
+kernel UDFs, the distributed pipeline, checkpointing, metrics.
 
 The checkpoint ledger holds one ``(bucket, run_id, completed_at, wave_s,
 n_buckets)`` row per committed bucket; ``metrics.bucket_metrics`` counts the

@@ -7,28 +7,30 @@
          that is not media|pdf                    with the scan]
       -> left join the ref table on (kind, media_ref): media|pdf spans
          take its text, '' where the ref has no row there
-      -> salted two-phase reassembly:            [explicit skew handling]
-           groupBy(doc_id, salt) partial collect
-           groupBy(doc_id) flatten + sort_array(offset)
+      -> groupBy(doc_id) collect_list            [one aggregate per
+         + array_sort(offset)                     document]
       -> documents(doc_id, spans) out
 
 The ref table (kind, media_ref, text) comes from recognize_refs: the
 distinct media|pdf refs of the documents, joined to their payloads and
-run through extract_ref_udf (OCR kernel | layout parse), each distinct
+run through the ref UDF (OCR kernel | layout parse), each distinct
 payload processed ONCE. run_extraction is recognize_refs composed with
 assemble; the checkpointed job (checkpoint.py) calls the two apart: the
 ref table once per invocation, assemble once per wave.
 
 Scale notes (the design target is 10^12 docs / 100 TB):
-- The media join is a distinct() over the (kind, media_ref) refs, then a
-  join to the payloads on media_ref. The distinct collapses popular refs
-  BEFORE the expensive kernel runs — the kernel cost is O(distinct
-  images), not O(media spans).
-- Reassembly is the one unavoidable shuffle on doc_id. A media-heavy doc
-  (the skew knob, BASELINE.json:6) would bottleneck a single reducer, so
-  phase 1 collects partial span lists per (doc_id, salt) and phase 2
-  merges n_salt small lists per doc — explicit salting, not AQE-dependent.
-- Span order NEVER relies on row order: sort_array on offset is the last
+- Skew handling sits where the cost is: the kernel. Its cost follows
+  distinct refs, not documents — a distinct() over the (kind, media_ref)
+  refs collapses popular refs BEFORE the kernel runs, and a
+  repartition(defaultParallelism * 2) sized by compute spreads them — so
+  a media-heavy document's images are recognized spread by ref, never by
+  document.
+- The span <-> ref join is left to AQE: its skew-join split, or a
+  broadcast when the ref table is small.
+- Reassembly is one groupBy(doc_id). A document's own spans must meet on
+  one reducer in any design, because its output is one row; salting the
+  aggregate would only add a shuffle.
+- Span order NEVER relies on row order: array_sort on offset is the last
   step before emitting (the core correctness invariant).
 """
 
@@ -37,14 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_text_recognition_spark.extraction.udfs import (
-    extract_main_text_udf,
-    extract_ref_udf,
-    make_extract_ref_udf,
-)
-from ocr_text_recognition_spark.kernel.reference_kernel import PREPROCESS_DEFAULTS
+from ocr_text_recognition_spark.extraction.udfs import extract_main_text_udf, make_extract_ref_udf
 
-DEFAULT_N_SALT = 8
 # Span kinds whose text is recognized from a media payload; every other
 # kind is HTML-ish text.
 REF_KINDS = ("media", "pdf")
@@ -107,21 +103,15 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def reassemble_spans(extracted: DataFrame, n_salt: int = DEFAULT_N_SALT) -> DataFrame:
+def reassemble_spans(extracted: DataFrame) -> DataFrame:
     """(doc_id, pos, kind, text, media_ref, offset) -> (doc_id, spans) with
     spans sorted by offset; a row with a NULL ``pos`` is a document without
-    spans and contributes no span. Two-phase salted aggregation so one
-    media-heavy doc cannot pin a single reducer."""
+    spans and contributes no span."""
     span = F.struct(F.col("offset"), F.col("kind"), F.col("text"), F.col("media_ref"))
-    partial = (
-        extracted.withColumn("salt", F.pmod(F.hash("offset"), F.lit(n_salt)))
-        .groupBy("doc_id", "salt")
-        # collect_list skips the NULL a span-less document's row maps to
-        .agg(F.collect_list(F.when(F.col("pos").isNotNull(), span)).alias("part"))
-    )
     return (
-        partial.groupBy("doc_id")
-        .agg(F.flatten(F.collect_list("part")).alias("unordered"))
+        extracted.groupBy("doc_id")
+        # collect_list skips the NULL a span-less document's row maps to
+        .agg(F.collect_list(F.when(F.col("pos").isNotNull(), span)).alias("unordered"))
         .select(
             "doc_id",
             F.transform(
@@ -148,7 +138,7 @@ def recognize_refs(
     once per distinct payload.
 
     kind='media' (OCR kernel) and kind='pdf' (layout parse) share ONE
-    distinct-ref pass: payloads are joined once and extract_ref_udf
+    distinct-ref pass: payloads are joined once and the ref UDF
     dispatches per kind inside the Arrow batch. A ref with no media row
     gets a NULL payload and text ''.
 
@@ -168,10 +158,7 @@ def recognize_refs(
     # few tasks.
     parallelism = spark.sparkContext.defaultParallelism * 2
     payloads = distinct_refs.join(media, "media_ref", "left").repartition(parallelism)
-    # The default chain (the job's flags left alone) runs the shared instance.
-    options = preprocess_kwargs or {}
-    default = {**PREPROCESS_DEFAULTS, **options} == PREPROCESS_DEFAULTS
-    ref_udf = extract_ref_udf if default else make_extract_ref_udf(**options)
+    ref_udf = make_extract_ref_udf(**(preprocess_kwargs or {}))
     return payloads.select(
         "kind",
         "media_ref",

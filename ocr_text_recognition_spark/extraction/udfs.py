@@ -81,9 +81,7 @@ def make_extract_ref_udf(**preprocess_kwargs):
     return _extract_ref_udf
 
 
-# Default instance (Otsu chain): (kind, payload) -> text, dispatching per
-# span kind inside the batch: 'media' through the OCR kernel, 'pdf'
-# through the layout parser. Lets media and pdf spans share ONE
-# distinct-ref pass + join instead of one subtree per kind (one fewer
-# documents scan, ~4 fewer stages).
+# Default instance (Otsu chain) for callers outside the pipeline: the
+# benchmark's warm-up and its UDF-boundary layer. The pipeline builds its
+# own through make_extract_ref_udf, with the job's kernel options.
 extract_ref_udf = make_extract_ref_udf()

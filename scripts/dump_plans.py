@@ -85,7 +85,7 @@ def main() -> None:
         "",
         "*two documents scans (one pass over the spans + the distinct refs), "
         "distinct-ref recognition with compute-sized repartition, one left "
-        "join of the recognized refs, salted two-phase reassembly*",
+        "join of the recognized refs, one doc_id aggregate for reassembly*",
         "",
         "```",
         plan.rstrip(),

@@ -87,20 +87,25 @@ def test_resume_through_file_uri_ledger(spark, small_corpus, tmp_path):
 
 
 def _counting_ref_udf(spark):
-    """extract_ref_udf behind an accumulator that counts the rows it is
-    called on, summed over every executor task."""
+    """A stand-in for ``make_extract_ref_udf`` whose UDFs count, in one
+    accumulator summed over every executor task, the rows they are called
+    on."""
     calls = spark.sparkContext.accumulator(0)
-    inner = udfs.extract_ref_udf.func
 
-    @pandas_udf(StringType())
-    def counting_extract_ref_udf(
-        batches: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        for kinds, payloads in batches:
-            calls.add(len(kinds))
-            yield from inner(iter([(kinds, payloads)]))
+    def make_counting_ref_udf(**options):
+        inner = udfs.make_extract_ref_udf(**options).func
 
-    return counting_extract_ref_udf, calls
+        @pandas_udf(StringType())
+        def counting_extract_ref_udf(
+            batches: Iterator[tuple[pd.Series, pd.Series]],
+        ) -> Iterator[pd.Series]:
+            for kinds, payloads in batches:
+                calls.add(len(kinds))
+                yield from inner(iter([(kinds, payloads)]))
+
+        return counting_extract_ref_udf
+
+    return make_counting_ref_udf, calls
 
 
 def _distinct_refs(docs, buckets, n_buckets):
@@ -120,8 +125,8 @@ def test_kernel_runs_once_per_distinct_ref(spark, small_corpus, tmp_path, monkey
     per_wave = sum(_distinct_refs(docs, w, 8) for w in waves)
     assert per_wave > _distinct_refs(docs, range(8), 8)
 
-    ref_udf, calls = _counting_ref_udf(spark)
-    monkeypatch.setattr(pipeline, "extract_ref_udf", ref_udf)
+    make_ref_udf, calls = _counting_ref_udf(spark)
+    monkeypatch.setattr(pipeline, "make_extract_ref_udf", make_ref_udf)
     out, ledger = str(tmp_path / "out"), str(tmp_path / "ledger")
     done = checkpoint.run_with_checkpoints(
         spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3
@@ -135,15 +140,15 @@ def test_kernel_runs_once_per_distinct_ref(spark, small_corpus, tmp_path, monkey
     # kill after one wave, then resume: each run recognizes only the refs
     # of the buckets it plans
     out, ledger = str(tmp_path / "out2"), str(tmp_path / "ledger2")
-    ref_udf, calls = _counting_ref_udf(spark)
-    monkeypatch.setattr(pipeline, "extract_ref_udf", ref_udf)
+    make_ref_udf, calls = _counting_ref_udf(spark)
+    monkeypatch.setattr(pipeline, "make_extract_ref_udf", make_ref_udf)
     first = checkpoint.run_with_checkpoints(
         spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3, max_waves=1
     )
     assert calls.value == _distinct_refs(docs, first, 8)
 
-    ref_udf, calls = _counting_ref_udf(spark)
-    monkeypatch.setattr(pipeline, "extract_ref_udf", ref_udf)
+    make_ref_udf, calls = _counting_ref_udf(spark)
+    monkeypatch.setattr(pipeline, "make_extract_ref_udf", make_ref_udf)
     rest = checkpoint.run_with_checkpoints(
         spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=3
     )
@@ -461,18 +466,3 @@ def test_waves_run_with_pinned_threads_off(spark, small_corpus, tmp_path, monkey
     assert _as_dict(checkpoint.read_output(spark, out).collect()) == _as_dict(
         r for _, r in golden_pd.iterrows()
     )
-
-
-def test_default_kernel_options_run_the_shared_ref_udf(spark, small_corpus, monkeypatch):
-    """The job passes all six kernel options through; left at
-    preprocess_image's defaults they select the module's shared ref UDF,
-    the one the counted tests and the benchmark run."""
-    from ocr_text_recognition_spark.kernel.reference_kernel import PREPROCESS_DEFAULTS
-
-    docs_pd, media_pd, _ = small_corpus
-    docs = pandas_to_spark(spark, docs_pd, "documents")
-    media = pandas_to_spark(spark, media_pd, "media")
-    ref_udf, calls = _counting_ref_udf(spark)
-    monkeypatch.setattr(pipeline, "extract_ref_udf", ref_udf)
-    refs = pipeline.recognize_refs(spark, docs, media, dict(PREPROCESS_DEFAULTS)).collect()
-    assert calls.value == len(refs) > 0

@@ -11,11 +11,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_text_recognition_spark.extraction.pipeline import (
-    explode_spans,
-    reassemble_spans,
-    run_extraction,
-)
+from ocr_text_recognition_spark.extraction.pipeline import run_extraction
 from ocr_text_recognition_spark.io_pandas import pandas_to_spark
 
 
@@ -36,15 +32,36 @@ def test_span_sequence_equality(spark, small_corpus):
     assert not bad, f"{len(bad)} docs mismatch, first: {bad[:1]}"
 
 
-def test_reassembly_is_salt_invariant(spark, small_corpus):
-    """Same output regardless of salt fan-out — salting is a physical
-    choice, never a semantic one."""
+def test_many_span_document_out_of_order_matches_golden(spark, small_corpus):
+    """A document of 1,200 spans, stored in shuffled offset order and mixing
+    text, media and missing-ref spans, comes back with every span exactly
+    once, sorted by offset, as the golden path has it."""
+    import numpy as np
+    import pandas as pd
+
+    from ocr_text_recognition_spark import corpus
+
     docs_pd, media_pd, _ = small_corpus
-    docs = pandas_to_spark(spark, docs_pd.head(10), "documents")
-    ex = explode_spans(docs).withColumn("text", F.coalesce("text", F.lit("")))
-    one = {r["doc_id"]: _as_tuples(r["spans"]) for r in reassemble_spans(ex, n_salt=1).collect()}
-    many = {r["doc_id"]: _as_tuples(r["spans"]) for r in reassemble_spans(ex, n_salt=32).collect()}
-    assert one == many
+    pool = [s for spans in docs_pd["spans"] for s in spans]
+    pool += [
+        {"kind": "media", "text": "", "media_ref": "no-such-image", "offset": 0},
+        {"kind": "pdf", "text": "", "media_ref": "no-such-pdf", "offset": 0},
+    ]
+    assert {s["kind"] for s in pool} >= {"text", "media"}
+    n = 1200
+    rng = np.random.default_rng(7)
+    offsets = rng.permutation(n)
+    spans = [{**pool[i % len(pool)], "offset": int(off)} for i, off in enumerate(offsets)]
+    docs_in = pd.concat(
+        [docs_pd.head(2), pd.DataFrame([{"doc_id": "many", "spans": spans}])], ignore_index=True
+    )
+    docs = pandas_to_spark(spark, docs_in, "documents")
+    media = pandas_to_spark(spark, media_pd, "media")
+
+    got = {r["doc_id"]: _as_tuples(r["spans"]) for r in run_extraction(spark, docs, media).collect()}
+    want = {r["doc_id"]: _as_tuples(r["spans"]) for _, r in corpus.make_golden(docs_in, media_pd).iterrows()}
+    assert [offset for *_, offset in got["many"]] == list(range(n))
+    assert got == want
 
 
 def test_offsets_strictly_ordered(spark, small_corpus):

@@ -11,6 +11,7 @@ fails CI instead of silently costing 10x at scale.
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -79,6 +80,25 @@ def test_extraction_pipeline_stays_arrow(spark, small_corpus):
     assert "ArrowEvalPython" in plan
 
 
+def test_extraction_pipeline_exchanges(spark, small_corpus, tmp_path):
+    """run_extraction over parquet input shuffles five times besides the
+    media broadcast: the distinct refs, the payload repartition, both sides
+    of the span <-> ref join, and the one doc_id aggregate of reassembly.
+    No salt column survives into the plan."""
+    from ocr_text_recognition_spark.extraction.pipeline import run_extraction
+    from ocr_text_recognition_spark.io_pandas import write_corpus_parquet
+
+    docs_pd, media_pd, _ = small_corpus
+    write_corpus_parquet(docs_pd, media_pd, str(tmp_path))
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    media = spark.read.parquet(str(tmp_path / "media.parquet"))
+    plan = _plan(run_extraction(spark, docs, media))
+    exchanges = re.findall(r"^\(\d+\) (\w*Exchange)$", plan, re.M)
+    assert exchanges.count("Exchange") == 5, plan
+    assert exchanges.count("BroadcastExchange") == 1, plan
+    assert not re.search(r"\bsalt#\d+", plan), plan
+
+
 def _plan_nodes(df) -> list[tuple[str, str]]:
     """(name, one-line description) of every operator of ``df``'s physical
     plan. A cached frame is one InMemoryTableScan leaf here: the plan that
@@ -123,6 +143,11 @@ def test_checkpoint_wave_joins_ref_table_only(spark, small_corpus, tmp_path):
     assert "Union" not in [name for name, _ in nodes]
     scans = [desc for name, desc in nodes if name.startswith("Scan")]
     assert len(scans) == 1 and "ReadSchema: struct<doc_id:string,spans:" in scans[0], scans
+    # reassembly is one partial/final aggregate pair, keyed on doc_id alone
+    aggs = [desc for name, desc in nodes if name == "ObjectHashAggregate"]
+    assert len(aggs) == 2, aggs
+    assert all(re.match(r"ObjectHashAggregate\(keys=\[doc_id#\d+\], ", desc) for desc in aggs), aggs
+    assert sorted("partial_collect_list(" in desc for desc in aggs) == [False, True], aggs
 
     ledger = ledger_frame(spark, [0, 5], "run", 0.5, 8)
     assert ledger.schema.simpleString() == (
