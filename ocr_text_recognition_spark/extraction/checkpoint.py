@@ -12,21 +12,24 @@ overwritten whole and the ledger is appended only AFTER a bucket's output
 commits, a crash between the two reprocesses that bucket — deterministic
 kernel + whole-directory overwrite = exactly-once output.
 
-Each invocation recognizes every distinct (kind, media_ref) of the buckets
-it plans to process ONCE, into a persisted ref table (kind, media_ref,
-text) that every wave joins against; a wave scans only its documents and
-runs only the text UDF and reassembly. The table is a deterministic
-function of the payloads and lives only in the Spark cache of this
-invocation (unpersisted on exit, error or not), so it adds no state to
-resume from: a crash loses recomputable cache, never a committed bucket,
-and the output and ledger are written exactly as without it.
+Each invocation builds ONE persisted stage: every span of the buckets it
+plans to process, with its final text (the HTML text UDF over text spans,
+each distinct (kind, media_ref) recognized once for media and pdf spans),
+tagged with its bucket and hash-partitioned by it. A wave is then the
+stage filtered to its buckets, one aggregate per document and the write:
+its only leaf is an InMemoryTableScan, and it runs no Python, reads no
+file and shuffles nothing. The stage is a deterministic function of the
+inputs and lives only in the Spark cache of this invocation (unpersisted
+on exit, error or not), so it adds no state to resume from: a crash loses
+recomputable cache, never a committed bucket, and the output and ledger
+are written exactly as without it.
 
 Waves are double-buffered: at most ``WAVES_IN_FLIGHT`` (two) waves compute
-and write at once, so wave k+1's planning, scan and shuffles fill the cores
-while wave k commits. The ledger appends stay on the calling thread, in wave
-order, each after its own wave's output commit: concurrent appends to one
-ledger path would share FileOutputCommitter's ``_temporary/0``, which the
-first commit deletes. The output writes may overlap because a dynamic
+and write at once, so wave k+1's aggregate fills the cores while wave k
+commits. The ledger appends stay on the calling thread, in wave order,
+each after its own wave's output commit: concurrent appends to one ledger
+path would share FileOutputCommitter's ``_temporary/0``, which the first
+commit deletes. The output writes may overlap because a dynamic
 partition overwrite stages each job under its own ``.spark-staging-<uuid>``
 and the waves' bucket sets are disjoint.
 
@@ -46,12 +49,16 @@ import uuid
 from collections import deque
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-from ocr_text_recognition_spark.extraction.pipeline import assemble, recognize_refs
+from ocr_text_recognition_spark.extraction.pipeline import (
+    reassemble_spans,
+    recognize_refs,
+    resolve_spans,
+    text_spans,
+)
 
 # The job's defaults (jobs/extract.py --n-buckets / --buckets-per-wave).
 DEFAULT_N_BUCKETS = 256
@@ -72,12 +79,12 @@ def _ledger_entries(spark: SparkSession, ledger_dir: str) -> set[tuple[int, int 
     ``ledger_dir`` (any path Spark reads: local, ``file://``, object
     store), ``n_buckets`` NULL in rows written before the column existed;
     none when the ledger does not exist yet."""
-    try:
-        ledger = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir)
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return set()
-        raise
+    # Ask the file system first: a missing path read through Spark costs an
+    # AnalysisException round trip on every first run.
+    path = spark._jvm.org.apache.hadoop.fs.Path(ledger_dir)
+    if not path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()).exists(path):
+        return set()
+    ledger = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir)
     rows = ledger.select("bucket", "n_buckets").distinct().collect()
     return {(r["bucket"], r["n_buckets"]) for r in rows}
 
@@ -110,20 +117,43 @@ def ledger_frame(
     )
 
 
-def write_wave(
-    docs_b: DataFrame, ref_text: DataFrame, wave: list[int], n_buckets: int, out_dir: str
-) -> float:
-    """Assemble the documents of ``wave``'s buckets against ``ref_text`` and
-    overwrite those buckets' output directories; returns the wave's wall
-    time in seconds."""
-    t0 = time.perf_counter()
-    wave_docs = docs_b.filter(F.col("bucket").isin(wave)).drop("bucket")
-    result = assemble(wave_docs, ref_text).withColumn(
-        "bucket", bucket_of(F.col("doc_id"), n_buckets)
+def stage_frame(
+    spark: SparkSession,
+    docs: DataFrame,
+    media: DataFrame,
+    buckets: list[int],
+    n_buckets: int,
+    preprocess_kwargs: dict | None = None,
+) -> DataFrame:
+    """Every span of the documents in ``buckets`` with its final text and
+    its ``bucket``, hash-partitioned by ``bucket``: the frame an invocation
+    persists once and every wave reads."""
+    planned = docs.filter(bucket_of(F.col("doc_id"), n_buckets).isin(buckets))
+    ref_text = recognize_refs(spark, planned, media, preprocess_kwargs)
+    return (
+        resolve_spans(text_spans(planned), ref_text)
+        .withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
+        .repartition("bucket")
     )
+
+
+def wave_frame(stage: DataFrame, wave: list[int]) -> DataFrame:
+    """The output rows (bucket, doc_id, spans) of ``wave``'s buckets. The
+    stage's hash partitioning on ``bucket`` already puts each bucket's
+    spans, and so each document's, in one task: the aggregate needs no
+    exchange."""
+    return reassemble_spans(stage.filter(F.col("bucket").isin(wave)), keys=("bucket", "doc_id"))
+
+
+def write_wave(stage: DataFrame, wave: list[int], out_dir: str) -> float:
+    """Overwrite the output directories of ``wave``'s buckets with their
+    documents reassembled from ``stage``; returns the wave's wall time in
+    seconds. The partitioned write keeps the stage's partitioning, so each
+    bucket is written by the one task that aggregated it."""
+    t0 = time.perf_counter()
     # Whole-directory overwrite per bucket == idempotent re-run.
     (
-        result.repartition("bucket")
+        wave_frame(stage, wave)
         .write.partitionBy("bucket")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")
@@ -147,9 +177,20 @@ def run_with_checkpoints(
     """Process the corpus bucket-wave by bucket-wave, checkpointing each.
 
     ``max_waves`` exists for kill/resume tests (process only the first K
-    waves, then 'crash'); it also bounds the ref table, which covers only
-    the planned buckets. Returns the buckets processed this invocation, in
+    waves, then 'crash'); it also bounds the stage, which covers only the
+    planned buckets. Returns the buckets processed this invocation, in
     wave order.
+
+    The stage is built and counted once, before the first wave: the
+    documents table is scanned twice (once for the spans, once for their
+    refs), the text UDF runs over each planned span once and the ref UDF
+    over each distinct planned ref once. It holds the output-sized spans
+    of the planned buckets (MEMORY_AND_DISK, so it spills rather than
+    fails), where a cache of the recognized refs alone would hold only
+    their text. Each bucket's aggregate runs in the one task that writes
+    that bucket. A crash loses at most ``WAVES_IN_FLIGHT`` waves' commits
+    (redone on resume, see below) plus the stage, which the resume rebuilds
+    over the buckets it still has to do.
 
     A ledger with another non-NULL ``n_buckets`` raises ValueError before
     any wave: its bucket numbers name other doc_id sets, so a resume over it
@@ -191,12 +232,11 @@ def run_with_checkpoints(
     if not waves:
         return []
 
-    docs_b = docs.withColumn("bucket", bucket_of(F.col("doc_id"), n_buckets))
-    planned = docs_b.filter(F.col("bucket").isin([b for w in waves for b in w])).drop("bucket")
-    ref_text = recognize_refs(spark, planned, media, preprocess_kwargs).persist()
+    planned = [b for w in waves for b in w]
+    stage = stage_frame(spark, docs, media, planned, n_buckets, preprocess_kwargs).persist()
     processed: list[int] = []
     try:
-        ref_text.count()  # materialize: the kernel runs here, before any wave
+        stage.count()  # materialize: both UDFs run here, before any wave
         # leaving the pool joins the in-flight wave, also on an error
         with ThreadPoolExecutor(WAVES_IN_FLIGHT, thread_name_prefix="checkpoint-wave") as pool:
             upcoming, pending = deque(waves), deque()  # pending: (wave, future), in wave order
@@ -208,8 +248,7 @@ def run_with_checkpoints(
                     # execution ids into it. Unpinned, the call returns spark.
                     wrap = inheritable_thread_target(spark)
                     write = write_wave if wrap is spark else wrap(write_wave)
-                    future = pool.submit(write, docs_b, ref_text, wave, n_buckets, out_dir)
-                    pending.append((wave, future))
+                    pending.append((wave, pool.submit(write, stage, wave, out_dir)))
                 wave, future = pending.popleft()
                 wave_s = future.result()
                 # Ledger append happens strictly after the output commit.
@@ -217,7 +256,7 @@ def run_with_checkpoints(
                 ledger.write.mode("append").parquet(ledger_dir)
                 processed.extend(wave)
     finally:
-        ref_text.unpersist()  # an in-flight wave reads ref_text until the pool is left
+        stage.unpersist()  # an in-flight wave reads the stage until the pool is left
     return processed
 
 

@@ -14,9 +14,10 @@
 The ref table (kind, media_ref, text) comes from recognize_refs: the
 distinct media|pdf refs of the documents, joined to their payloads and
 run through the ref UDF (OCR kernel | layout parse), each distinct
-payload processed ONCE. run_extraction is recognize_refs composed with
-assemble; the checkpointed job (checkpoint.py) calls the two apart: the
-ref table once per invocation, assemble once per wave.
+payload processed ONCE. run_extraction is text_spans and recognize_refs
+joined by resolve_spans, then reassemble_spans. The checkpointed job
+(checkpoint.py) resolves every planned span once per invocation, into a
+persisted stage, and runs only reassemble_spans and the write per wave.
 
 Scale notes (the design target is 10^12 docs / 100 TB):
 - Skew handling sits where the cost is: the kernel. Its cost follows
@@ -103,17 +104,18 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def reassemble_spans(extracted: DataFrame) -> DataFrame:
-    """(doc_id, pos, kind, text, media_ref, offset) -> (doc_id, spans) with
+def reassemble_spans(extracted: DataFrame, keys: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """(*keys, pos, kind, text, media_ref, offset) -> (*keys, spans) with
     spans sorted by offset; a row with a NULL ``pos`` is a document without
-    spans and contributes no span."""
+    spans and contributes no span. ``keys`` must include ``doc_id``; any
+    other key has to be a function of it (the checkpoint's bucket)."""
     span = F.struct(F.col("offset"), F.col("kind"), F.col("text"), F.col("media_ref"))
     return (
-        extracted.groupBy("doc_id")
+        extracted.groupBy(*keys)
         # collect_list skips the NULL a span-less document's row maps to
         .agg(F.collect_list(F.when(F.col("pos").isNotNull(), span)).alias("unordered"))
         .select(
-            "doc_id",
+            *keys,
             F.transform(
                 F.array_sort("unordered"),  # struct sort: offset is field 1
                 lambda s: F.struct(
@@ -166,25 +168,29 @@ def recognize_refs(
     )
 
 
-def assemble(docs: DataFrame, ref_text: DataFrame) -> DataFrame:
-    """documents + recognized refs -> extracted documents (doc_id, spans),
-    in one pass over the spans.
+def text_spans(docs: DataFrame) -> DataFrame:
+    """documents -> exploded spans plus ``main_text``: the HTML extractor's
+    output for every span that is not media|pdf, NULL for those."""
+    is_ref = F.col("kind").isin(*REF_KINDS)
+    return explode_spans(docs).withColumn(
+        "main_text", extract_main_text_udf(F.when(is_ref, F.lit(None)).otherwise(F.col("text")))
+    )
+
+
+def resolve_spans(spans: DataFrame, ref_text: DataFrame) -> DataFrame:
+    """``text_spans``' output + recognized refs -> spans with their final
+    text (doc_id, pos, kind, text, media_ref, offset).
 
     Media and pdf spans take their text from ``ref_text``
     (``recognize_refs``'s output), '' where the ref has no row there; every
-    other span goes through the HTML extractor. No payload and no kernel
-    work is touched.
+    other span keeps its HTML extractor text. No payload and no kernel work
+    is touched.
     """
     is_ref = F.col("kind").isin(*REF_KINDS)
-    spans = explode_spans(docs).withColumn(
-        "main_text", extract_main_text_udf(F.when(is_ref, F.lit(None)).otherwise(F.col("text")))
-    )
     refs = ref_text.withColumnRenamed("text", "ref_text")
     text = F.when(is_ref, F.coalesce("ref_text", F.lit(""))).otherwise(F.col("main_text"))
-    return reassemble_spans(
-        spans.join(refs, ["kind", "media_ref"], "left").select(
-            "doc_id", "pos", "kind", text.alias("text"), "media_ref", "offset"
-        )
+    return spans.join(refs, ["kind", "media_ref"], "left").select(
+        "doc_id", "pos", "kind", text.alias("text"), "media_ref", "offset"
     )
 
 
@@ -200,5 +206,6 @@ def run_extraction(
     where every span's text has been replaced by its extraction result.
     ``preprocess_kwargs`` as in ``recognize_refs``.
     """
-    return assemble(docs, recognize_refs(spark, docs, media, preprocess_kwargs))
+    ref_text = recognize_refs(spark, docs, media, preprocess_kwargs)
+    return reassemble_spans(resolve_spans(text_spans(docs), ref_text))
 

@@ -234,7 +234,7 @@ def test_overlapping_waves_commit_before_ledger(spark, small_corpus, tmp_path):
 
 def test_failing_wave_propagates_and_resumes(spark, small_corpus, tmp_path, monkeypatch):
     """A wave that raises: the caller gets the error, every ledgered bucket
-    has committed output, the ref table is released and no wave thread is
+    has committed output, the stage is released and no wave thread is
     left; a clean resume then reaches the golden with each bucket ledgered
     exactly once."""
     docs_pd, media_pd, golden_pd = small_corpus
@@ -245,14 +245,14 @@ def test_failing_wave_propagates_and_resumes(spark, small_corpus, tmp_path, monk
     threads = threading.active_count()
 
     calls = itertools.count(1)
-    real_assemble = checkpoint.assemble
+    real_write_wave = checkpoint.write_wave
 
     def third_call_fails(*args, **kwargs):
         if next(calls) == 3:
             raise RuntimeError("wave failed")
-        return real_assemble(*args, **kwargs)
+        return real_write_wave(*args, **kwargs)
 
-    monkeypatch.setattr(checkpoint, "assemble", third_call_fails)
+    monkeypatch.setattr(checkpoint, "write_wave", third_call_fails)
     with pytest.raises(RuntimeError, match="wave failed"):
         checkpoint.run_with_checkpoints(
             spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=2, run_id="failed"
@@ -265,7 +265,7 @@ def test_failing_wave_propagates_and_resumes(spark, small_corpus, tmp_path, monk
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     assert threading.active_count() == threads and _wave_threads() == []
 
-    monkeypatch.setattr(checkpoint, "assemble", real_assemble)
+    monkeypatch.setattr(checkpoint, "write_wave", real_write_wave)
     rest = checkpoint.run_with_checkpoints(
         spark, docs, media, out, ledger, n_buckets=8, buckets_per_wave=2, run_id="resume"
     )

@@ -101,52 +101,67 @@ def test_extraction_pipeline_exchanges(spark, small_corpus, tmp_path):
 
 def _plan_nodes(df) -> list[tuple[str, str]]:
     """(name, one-line description) of every operator of ``df``'s physical
-    plan. A cached frame is one InMemoryTableScan leaf here: the plan that
-    built the cache is not walked, because it does not run again."""
+    plan as it will run, exchanges included. A cached frame is one
+    InMemoryTableScan leaf here: the plan that built the cache is not
+    walked, because it does not run again."""
     nodes = []
 
     def walk(node) -> None:
+        if node.nodeName() == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
         nodes.append((node.nodeName(), node.simpleString(1000)))
         children = node.children()
         for i in range(children.size()):
             walk(children.apply(i))
 
-    walk(df._jdf.queryExecution().sparkPlan())
+    walk(df._jdf.queryExecution().executedPlan())
     return nodes
 
 
-def test_checkpoint_wave_joins_ref_table_only(spark, small_corpus, tmp_path):
-    """A checkpoint wave (assemble over a persisted ref table) is one pass
-    over the spans: exactly one documents scan, no union, and the text UDF
-    as its only Python node, with nothing of the kernel stage (no ref UDF,
-    no media scan). Its ledger rows are built in the JVM, with no Python
-    RDD behind them."""
-    from ocr_text_recognition_spark.extraction.checkpoint import ledger_frame
-    from ocr_text_recognition_spark.extraction.pipeline import assemble, recognize_refs
+def test_checkpoint_wave_reads_only_the_stage(spark, small_corpus, tmp_path):
+    """The stage runs the text UDF and the ref UDF once each over two
+    documents scans. A checkpoint wave over the persisted stage is a filter
+    and one aggregate per document on an InMemoryTableScan: no Python, no
+    exchange, no broadcast, no file scan. Its ledger rows are built in the
+    JVM, with no Python RDD behind them."""
+    from ocr_text_recognition_spark.extraction.checkpoint import (
+        ledger_frame,
+        stage_frame,
+        wave_frame,
+    )
     from ocr_text_recognition_spark.io_pandas import write_corpus_parquet
 
     docs_pd, media_pd, _ = small_corpus
     write_corpus_parquet(docs_pd, media_pd, str(tmp_path))
     docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
     media = spark.read.parquet(str(tmp_path / "media.parquet"))
-    ref_text = recognize_refs(spark, docs, media).persist()
+    stage = stage_frame(spark, docs, media, list(range(8)), 8)
+    stage_nodes = _plan_nodes(stage)
+    stage.persist()
     try:
-        ref_text.count()
-        nodes = _plan_nodes(assemble(docs, ref_text))
+        stage.count()
+        nodes = _plan_nodes(wave_frame(stage, [0, 5]))
     finally:
-        ref_text.unpersist()
-    python = [desc for name, desc in nodes if "EvalPython" in name]
-    assert [name for name, _ in nodes if "EvalPython" in name] == ["ArrowEvalPython"]
-    assert "extract_main_text_udf" in python[0]
-    assert not any("extract_ref_udf" in desc for _, desc in nodes)
-    assert "InMemoryTableScan" in [name for name, _ in nodes]
-    assert "Union" not in [name for name, _ in nodes]
-    scans = [desc for name, desc in nodes if name.startswith("Scan")]
-    assert len(scans) == 1 and "ReadSchema: struct<doc_id:string,spans:" in scans[0], scans
-    # reassembly is one partial/final aggregate pair, keyed on doc_id alone
+        stage.unpersist()
+
+    python = [desc for name, desc in stage_nodes if "EvalPython" in name]
+    assert [name for name, _ in stage_nodes if "EvalPython" in name] == ["ArrowEvalPython"] * 2
+    assert sum("extract_main_text_udf" in desc for desc in python) == 1, python
+    assert sum("extract_ref_udf" in desc for desc in python) == 1, python
+    scans = [desc for name, desc in stage_nodes if name.startswith("Scan")]
+    docs_schema = "ReadSchema: struct<doc_id:string,spans:"
+    assert len(scans) == 3 and sum(docs_schema in desc for desc in scans) == 2, scans
+
+    names = [name for name, _ in nodes]
+    assert not any("EvalPython" in name or "Exchange" in name for name in names), names
+    assert not any(name.startswith("Scan") for name in names), names
+    memory = [desc for name, desc in nodes if name == "InMemoryTableScan"]
+    assert len(memory) == 1 and re.search(r"\[bucket#\d+ IN \(0,5\)\]", memory[0]), memory
+    # reassembly is one partial/final aggregate pair, keyed on (bucket, doc_id)
     aggs = [desc for name, desc in nodes if name == "ObjectHashAggregate"]
     assert len(aggs) == 2, aggs
-    assert all(re.match(r"ObjectHashAggregate\(keys=\[doc_id#\d+\], ", desc) for desc in aggs), aggs
+    keys = r"ObjectHashAggregate\(keys=\[bucket#\d+, doc_id#\d+\], "
+    assert all(re.match(keys, desc) for desc in aggs), aggs
     assert sorted("partial_collect_list(" in desc for desc in aggs) == [False, True], aggs
 
     ledger = ledger_frame(spark, [0, 5], "run", 0.5, 8)
